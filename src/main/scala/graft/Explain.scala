@@ -13,7 +13,7 @@ object Explain {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // keep CPU-heavy small-byte stages at full width (see Bench)
+      // keep CPU-heavy small-byte stages at full width (see Verify)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

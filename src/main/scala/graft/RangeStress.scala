@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Heterogeneous-interval stress for the two range-join formulations
-  * (diagnostics main, like [[CcDebug]] — not a gate query).
+  * (diagnostics main — not a gate query).
   *
   * The gate workload (`events_window_join*`) has UNIFORM 30-min
   * windows, so the binned form runs at its best case: bin = width,

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** RAM-backed scratch-dir management for the harness mains (round-15
   * hygiene, r14 VERDICT item 7 / ADVICE item 1): every scratch root is
-  * suffixed with the owning JVM's pid so (a) concurrent JVMs (Bench +
-  * Verify) can never collide on shuffle or checkpoint paths, and (b) a
+  * suffixed with the owning JVM's pid so (a) concurrent JVMs (e.g. two
+  * Verify runs) can never collide on shuffle or checkpoint paths, and (b) a
   * startup sweep can safely reclaim dirs left behind by killed runs —
   * a SIGKILL'd JVM cleans nothing, and /dev/shm otherwise accumulates
   * ~GBs of dead shuffle/state files until reboot. */
@@ -19,8 +19,13 @@ object Scratch {
   private def root: String =
     if (shmOk) "/dev/shm" else System.getProperty("java.io.tmpdir")
 
-  private def rm(p: java.io.File): Unit = {
-    Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
+  /** Recursive delete that never follows a symbolic link: a link is
+    * removed as a link, so a planted `graft-local-<dead pid>` link to a
+    * directory cannot make the sweep empty the link's target. */
+  private[graft] def rm(p: java.io.File): Unit = {
+    if (!Files.isSymbolicLink(p.toPath))
+      Option(p.listFiles()).foreach(_.foreach(rm))
+    p.delete(); ()
   }
 
   private def pidAlive(pid: Long): Boolean =

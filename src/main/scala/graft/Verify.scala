@@ -17,11 +17,14 @@ object Verify {
       // keep gls_fap's 104-buffer aggregate inside whole-stage codegen
       .config("spark.sql.codegen.maxFields", "300")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // keep CPU-heavy small-byte stages at full width (see Bench)
+      // AQE coalesces by BYTES, but per-series kernels (IIR/sift/
+      // Cholesky) are CPU-heavy at tiny byte sizes: the default 1 MB
+      // floor serializes them onto 1-2 threads; inert at real scale
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // same local-harness shuffle hygiene as Bench (sort writer +
-      // RAM-backed scratch when present) — the dump is untimed but
-      // the driver pays its wall-clock
+      // local-harness shuffle hygiene (sort writer: 1 data + 1 index
+      // file per map task instead of one per reducer; RAM-backed
+      // scratch when present) — the dump is untimed but the driver
+      // pays its wall-clock
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // per-JVM RAM scratch + stale-run sweep (round 15, Scratch.scala)
       .config("spark.local.dir", Scratch.localDir())
@@ -30,7 +33,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for targeted dev iteration
-    // (the driver never sets it; Bench has the same knob)
+    // (the driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))

@@ -38,31 +38,6 @@ object Dedup {
       |    FROM documents d)
       |  WHERE tok <> '')""".stripMargin
 
-  /** Persist the shared shingle table AND the capped band-bucket
-    * candidate pairs so the dedup family's later canonically-equal
-    * subplans cache-hit (called from Bench): the candidate subplan is
-    * shared verbatim by dedup_minhash_lsh, dedup_ngram_jaccard and
-    * dedup_clusters. */
-  def warm(spark: SparkSession, dir: String)
-      : Seq[org.apache.spark.sql.Dataset[_]] = {
-    val sh = shingles(spark, dir).persist(); sh.count()
-    val cand = minhashCand(spark, dir, MaxBucket).persist(); cand.count()
-    // the 60-bit signature pass is shared verbatim by dedup_simhash
-    // and dedup_simhash_pairs (round 12)
-    val sig = simhashSig(spark, dir).persist(); sig.count()
-    // Round 15 (r14 verdict item 6): the CC label table is consumed by
-    // THREE queries (dedup_clusters, corpus_pipeline(+pack) via the
-    // rep join, docs_corpus) and, being an imperative loop of
-    // localCheckpoint snapshots, can never be a canonically-equal
-    // subplan the CacheManager could substitute — each invocation
-    // re-RAN the whole propagation loop (4-6 rounds × 2 jobs each,
-    // per timed run). Materialize it once through the same keyed
-    // holder pattern as Pipeline.packCounts; registering the Dataset
-    // here lets Bench's family release free it after docs_corpus.
-    val cl = dedupClusters(spark, dir)
-    Seq(sh, cand, sig, cl)
-  }
-
   // One live persisted cluster table per (session, sfDir) — the
   // packCounts holder pattern (queryable AND releasable: an
   // unpersisted entry is rebuilt on next lookup, so any caller that
@@ -566,8 +541,8 @@ object Dedup {
     * the keyed holder above: the CC loop is eager/imperative, so
     * without the holder every consumer invocation re-ran the whole
     * propagation loop. Identical rows either way (the holder only
-    * dedups work); storage is released by Bench's family-release or
-    * [[releaseClusters]]. */
+    * dedups work); storage is released by unpersisting the returned
+    * Dataset or by [[releaseClusters]]. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     sweepStoppedClusters()
     clustersCache.compute((spark, dir), (_, prev) => {
@@ -801,7 +776,7 @@ object Dedup {
         sum(when(col("c") > 0, 1L).otherwise(0L)).as("dropped_tokens"))
       // a fully-duplicated document leaves the corpus entirely — and
       // the output row count now DEPENDS on coverage, so a count-based
-      // consumer (Bench) cannot constant-fold the event branch away
+      // consumer cannot constant-fold the event branch away
       .filter(col("kept_tokens") > 0)
   }
 

@@ -89,8 +89,8 @@ object EmbeddingStats {
   // map-side combine to ≤ d²/2 rows per task before the one shuffle.
   // Output stays exact integers — no rounding anywhere in the gate.
   // -------------------------------------------------------------------
-  /** Canonical Gram plan (shared by emb_gram and the power iteration;
-    * Bench persists one instance).
+  /** Canonical Gram plan (shared by emb_gram and the power iteration,
+    * so one persisted instance serves both).
     *
     * The d(d+1)/2 upper-triangle products are generated IN-ROW from
     * the embedding array (nested `transform` + `slice` over the

@@ -93,17 +93,6 @@ object Pq {
        |  FROM cq c JOIN asg0p a ON a.vec_id = c.vec_id AND a.m = c.m
        |  GROUP BY 1, 2, 3)""".stripMargin
 
-  /** Persist the codebook and code table (called from Bench): the
-    * cluster analogue is training the codebook once and storing the
-    * compressed index; every later canonically-equal subplan
-    * (emb_pq_codes itself, both ann_pq_topk stages) cache-hits. */
-  private[graft] def warm(spark: SparkSession, dir: String)
-      : Seq[org.apache.spark.sql.Dataset[_]] = {
-    val cs = centroids(spark, dir).persist(); cs.count()
-    val codes = embPqCodes(spark, dir).persist(); codes.count()
-    Seq(cs, codes)
-  }
-
   /** The corpus code table (vec_id, m, code) — the compressed index. */
   def embPqCodes(spark: SparkSession, dir: String): DataFrame = {
     val c = comps(spark, dir)

@@ -296,16 +296,6 @@ object SemDedup {
     (cents, fine, () => { cents.unpersist(); asgC.unpersist(); () })
   }
 
-  /** Persist the assignment table (called from Bench): the cluster
-    * analogue of training the cells once and storing the assignment —
-    * emb_kmeans and dedup_semantic both substitute the one persisted
-    * instance (the plan is declarative and capture-free, so repeated
-    * invocations stay canonically equal). */
-  private[graft] def warm(spark: SparkSession, dir: String)
-      : Seq[org.apache.spark.sql.Dataset[_]] = {
-    val a = assign(spark, dir).persist(); a.count(); Seq(a)
-  }
-
   /** emb_kmeans — the clustering itself as a diagnostic: per cell,
     * member count and inertia (exact micro-unit integer sum of the
     * rounded L2² distances, so the cross-engine sum order is moot). */

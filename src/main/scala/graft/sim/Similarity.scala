@@ -254,9 +254,10 @@ object Similarity {
   private[sim] val NPROBE = 4
 
   /** The quantizer pipeline (seed assign → Lloyd step → refined
-    * rank-vs-centroid frame), shared so Bench can persist ONE instance
-    * as a materialized view — the cluster analogue is writing the
-    * corpus bucketed by cell once and probing it from then on. */
+    * rank-vs-centroid frame), one canonical plan so a persisted
+    * instance serves every consumer as a materialized view — the
+    * cluster analogue is writing the corpus bucketed by cell once and
+    * probing it from then on. */
   private[graft] def ivfRanked(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.CosineSim.register(spark)
     val emb = Tables.table(spark, dir, "embeddings")

@@ -22,10 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * monster row byte-identically through parquet); the OPERATOR
   * evidence lives in the downstream rows.
   *
-  * Bench EXCLUDES `skew_*` rows (graft/Bench.scala): they measure
-  * generator + adversarial-corpus cost, not operator throughput on
-  * the sf corpus — skew PERFORMANCE evidence is SCALING.md's 50k+100k
-  * stressor runs; these rows are the skew CORRECTNESS gate.
+  * `skew_*` rows time generator + adversarial-corpus cost, not
+  * operator throughput on the sf corpus — skew PERFORMANCE evidence
+  * is SCALING.md's 50k+100k stressor runs; these rows are the skew
+  * CORRECTNESS gate.
   */
 object SkewGate {
 

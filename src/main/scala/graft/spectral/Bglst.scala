@@ -176,8 +176,8 @@ object Bglst {
     * normalisation drops the f-independent constants (priors, ‖yn‖²)
     * AND keeps the hashed values O(1–100). */
   /** The solved grid — shared subplan between the periodogram and the
-    * best-period twin (they project different columns of it, so Bench
-    * persists THIS plan and CacheManager substitutes it into both). */
+    * best-period twin (they project different columns of it, so a
+    * persisted instance of THIS plan is substituted into both). */
   private[graft] def solvedGrid(spark: SparkSession, dir: String): DataFrame =
     lnp(moments(spark, dir))
 

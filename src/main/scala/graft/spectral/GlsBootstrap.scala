@@ -40,9 +40,9 @@ import org.apache.spark.sql.functions._
   * bit-identical cross-engine and only the (already-rounded) sum
   * order differs — the same tolerance the declarative avg had.
   *
-  * Round-7 measurement (graft.Prof, sf0.1/local[32]): the declarative
-  * 104-expression formulation spent ~95 CPU-seconds of aggregate
-  * machinery on ~1 Gflop of arithmetic, and AQE's partition coalescing
+  * Round-7 measurement (executed-plan metrics, sf0.1/local[32]): the
+  * declarative 104-expression formulation spent ~95 CPU-seconds of
+  * aggregate machinery on ~1 Gflop of arithmetic, and AQE's coalescing
   * collapsed the tiny pre-fan-out shuffle to 1-2 partitions so that
   * work also SERIALIZED (9-12 s wall). The pinned repartition plus the
   * imperative aggregate take the query to <1 s wall at the same scale.

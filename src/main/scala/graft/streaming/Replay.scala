@@ -42,7 +42,7 @@ object Replay {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong()
   // previous memory-sink table per op: dropped when the op re-runs so
-  // repeated Bench invocations don't accumulate sink tables
+  // repeated invocations in one session don't accumulate sink tables
   private val lastSink =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       String]()
@@ -99,9 +99,10 @@ object Replay {
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // Spark 4.1 wraps every checkpoint write in the checksum file
     // manager: each state-store delta commit AWAITS a checksum
-    // computed on a side pool (StageProf: the replay's task time was
-    // 49 s at 1.9 s CPU, dominated by ChecksumCheckpointFileManager.
-    // awaitResult inside finalizeDeltaFile). The replay checkpoint is
+    // computed on a side pool (a per-stage profile: the replay's task
+    // time was 49 s at 1.9 s CPU, dominated by
+    // ChecksumCheckpointFileManager.awaitResult inside
+    // finalizeDeltaFile). The replay checkpoint is
     // run-scoped scratch on a local disk — corruption detection buys
     // nothing here — so scope the checksum off for the gate queries;
     // production twins keep whatever their session sets.
@@ -109,8 +110,8 @@ object Replay {
     val prevCkSum = spark.conf.getOption(ckSumKey)
     spark.conf.set(ckSumKey, "false")
     // Round 14 (optimization): the replay's wall was never the data —
-    // StageProf showed the micro-batch stages at 49 s task time but
-    // only 1.9 s CPU: every state-store partition commit fsyncs its
+    // a per-stage profile showed the micro-batch stages at 49 s task
+    // time but only 1.9 s CPU: every state-store partition commit fsyncs its
     // delta file to the disk-backed default checkpoint dir, parts ×
     // batches times per run. The gate needs the checkpoint only while
     // the query runs (determinism comes from the ordered feed, not
@@ -118,20 +119,18 @@ object Replay {
     // — commit semantics, plans and results are unchanged; production
     // twins configure their own durable checkpointLocation.
     // Round 15 (r14 ADVICE item 1): the base is pid-suffixed so two
-    // concurrent JVMs (Bench + Verify) can never collide on a
+    // concurrent JVMs (e.g. two Verify runs) can never collide on a
     // checkpoint path, and a crashed run's leftovers are swept by the
     // next Scratch.localDir() call instead of persisting to reboot.
     val ckDir = s"${graft.Scratch.replayCkBase()}/$qn"
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-    }
+    val ckFile = new java.io.File(ckDir)
     // defensive: a stale dir here (killed run, same pid recycled)
     // would make append-mode queries throw on checkpoint recovery
-    rm(new java.io.File(ckDir))
+    graft.Scratch.rm(ckFile)
     val q = try mk(input.toDS()).writeStream.outputMode(mode)
       .option("checkpointLocation", ckDir)
       .format("memory").queryName(qn).start()
-    catch { case e: Throwable => rm(new java.io.File(ckDir)); throw e }
+    catch { case e: Throwable => graft.Scratch.rm(ckFile); throw e }
     finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       prevCkSum match {
@@ -144,11 +143,11 @@ object Replay {
       q.stop()
       // Every run loads parts× state-store providers keyed by its
       // fresh checkpoint dir, and a stopped query does NOT unload
-      // them — across a 12-replay × multi-run bench ~10³ dead
+      // them — across a 12-replay × multi-run session ~10³ dead
       // providers accumulate, and each 60 s maintenance tick then
       // iterates all of them doing Hadoop local-FS shell forks
       // (chmod/stat — no native hadoop lib here) while holding the
-      // provider-map lock, which StageProf caught as task threads
+      // provider-map lock, which a stage profile caught as task threads
       // BLOCKED in StateStore.getStateStoreProvider mid-measurement.
       // Unload eagerly — scoped to THIS query's checkpoint root
       // (round 15, r14 VERDICT item 9: unloadAll() would close a
@@ -156,8 +155,8 @@ object Replay {
       org.apache.spark.sql.graft.StateStoreBridge
         .unloadForCheckpoint(ckDir)
       // the checkpoint is run-scoped scratch: delete it so repeated
-      // bench runs don't accumulate state/offset files in the RAM dir
-      rm(new java.io.File(ckDir))
+      // runs don't accumulate state/offset files in the RAM dir
+      graft.Scratch.rm(ckFile)
     }
     Option(lastSink.put((spark, op), qn))
       .foreach(spark.catalog.dropTempView(_))

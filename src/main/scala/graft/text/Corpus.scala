@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus construction — the pipeline a
   * pretraining data job actually runs, composed from the individual
-  * operators so their plans (and the Bench-persisted shingle /
-  * candidate intermediates) are shared rather than recomputed:
+  * operators so their plans (and any persisted shingle / candidate
+  * intermediates) are shared rather than recomputed:
   *
   *   language filter (en)  ∧  quality ≥ 0.5  ∧  near-dup canonical
   *

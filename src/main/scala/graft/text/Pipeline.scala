@@ -122,12 +122,10 @@ object Pipeline {
   // One live persisted card per (session, sfDir): a bare persist()
   // inside the query fn held the cached table until session end
   // (round-12 ADVICE) — the keyed holder makes the cache queryable
-  // and RELEASABLE. In practice Bench releases it by registering the
-  // returned Dataset with its family-release machinery and
-  // unpersisting THAT once the corpus_pipeline family finishes — a
-  // StorageLevel.NONE entry is rebuilt on next lookup, so any caller
-  // that unpersists the Dataset works; releaseCounts is the explicit
-  // hook for harnesses that also want the map entry gone.
+  // and RELEASABLE: a StorageLevel.NONE entry is rebuilt on next
+  // lookup, so any caller that unpersists the returned Dataset frees
+  // it; releaseCounts is the explicit hook for harnesses that also
+  // want the map entry gone.
   private val countsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       DataFrame]()

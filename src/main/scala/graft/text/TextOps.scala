@@ -237,8 +237,8 @@ object TextOps {
   // engines' row_number picks are identical, with tok as tiebreak.
   // -------------------------------------------------------------------
   /** The (doc_id, tok) term-frequency base shared by text_tfidf_top
-    * and text_unigram_logprob — Bench persists ONE instance so the
-    * CacheManager substitutes it into both queries' plans. */
+    * and text_unigram_logprob: one canonical plan, so a persisted
+    * instance is substituted by the CacheManager into both queries. */
   def termFreq(spark: SparkSession, dir: String): DataFrame =
     tok(spark, dir).groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("tf"))

@@ -156,8 +156,8 @@ object GpOps {
     * (below): a closure constructed per invocation would capture a
     * fresh kernel eta-expansion, making two calls of the same map
     * canonically different plans — which defeats the CacheManager
-    * substitution gp_predict's compose (and Bench's persisted
-    * harmonic map) relies on. The grid is a parameter so reference
+    * substitution gp_predict's compose (and any persisted harmonic
+    * map) relies on. The grid is a parameter so reference
     * parity tests can scan the spotted star's day-scale range
     * (tests/test_gp.py MCMC medians at 10-11 d, beyond the default
     * grid's edge); registered queries always use the default. */
@@ -264,7 +264,7 @@ object GpOps {
     * series, AQE broadcasts it locally) instead of re-running the
     * 20-period scan privately: 21 Cholesky factorizations per series
     * become 1 + the map sub-plan, which CacheManager substitutes from
-    * Bench's persisted harmonic map. Output unchanged: the internal
+    * a persisted harmonic map. Output unchanged: the internal
     * scan picked the same argmax the map publishes (same subsample,
     * kernel, grid, first-max tie rule). Rows (id, t, y, mu) with y/μ
     * in original units (mean re-added); rows-only oracle (the Cholesky
@@ -342,7 +342,7 @@ object GpOps {
   // EXISTING log-likelihoods — posterior, CDF, and the posterior-median
   // flag (the uncertainty summary MCMC's trace median provides) as
   // pure window arithmetic over gp_harmonic_map. No new Cholesky work:
-  // the map subplan is shared (plan-identity vals + Bench persist).
+  // the map subplan is shared (plan-identity vals).
   //
   // DERIVED-INPUT oracle: DuckDB replays the softmax over the
   // gp_harmonic_map parquet Verify dump — loglik is 1e-3-quantized at
@@ -730,7 +730,7 @@ object GpOps {
   // scores, and agreement flags. Four id-equi joins of one-row-per-
   // series frames — at cluster scale each side is the tiny output of
   // its grid map, so AQE broadcasts every join; no extra Cholesky work
-  // beyond the maps themselves (shared sub-plans, persisted in Bench).
+  // beyond the maps themselves (shared, canonically-equal sub-plans).
   //
   // DERIVED-INPUT oracle: DuckDB replays the is_best filter + joins
   // over the four Verify dumps — this puts the gp_period_map /

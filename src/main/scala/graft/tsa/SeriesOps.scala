@@ -19,8 +19,8 @@ object SeriesOps {
     * lambda here would capture `f` as a fresh closure instance on every
     * operator invocation, making two calls of the SAME operator
     * canonically different plans — which silently defeats CacheManager
-    * substitution (Bench's shared-scan warm-up relies on it). A case
-    * class compares equal by its `f` field, and the operator lambdas
+    * substitution of a persisted intermediate. A case class
+    * compares equal by its `f` field, and the operator lambdas
     * are capture-free JVM-cached singletons, so two invocations now
     * produce `sameResult` plans (guarded by PlanReuseSpec). */
   private[graft] case class SeriesFunc[T](
@@ -85,7 +85,7 @@ object SeriesOps {
   // -------------------------------------------------------------------
   // sos/dt hoisted to object level and the merge step stored in a val:
   // acf_period_quality composes this plan, so two invocations must be
-  // canonically equal for Bench's persisted instance to substitute
+  // canonically equal for a persisted instance to substitute
   // (see SeriesFunc — a capturing lambda would defeat it)
   private val ButterDt = 21600.0
   private val ButterSos =

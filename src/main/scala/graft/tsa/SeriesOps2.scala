@@ -366,8 +366,8 @@ object SeriesOps2 {
     * ratios (|mu/amp|), so EMD commutes with the sigma scaling already
     * folded into the emitted modes. At scale this turns the
     * postprocess into a cheap pass over the materialized ceemdan
-    * intermediate (one k×single-mode sift per series), and in Bench
-    * the persisted ceemdan plan substitutes straight into it. */
+    * intermediate (one k×single-mode sift per series), and a
+    * persisted ceemdan plan substitutes straight into it. */
   def ceemdanPost(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     ceemdan(spark, dir)
@@ -434,7 +434,7 @@ object SeriesOps2 {
   /** ceemdan_c_orthogonality — reference decomposition.py:361-374
     * (c_orthogonality_matrix): the same pairwise mode correlation over
     * the POST-PROCESSED modes — a pure compose over ceemdan_post, so
-    * in Bench the persisted ceemdan plan serves this whole chain. */
+    * a persisted ceemdan plan serves this whole chain. */
   def ceemdanCOrthogonality(spark: SparkSession, dir: String): DataFrame =
     orthogonalityOf(ceemdanPost(spark, dir))
 

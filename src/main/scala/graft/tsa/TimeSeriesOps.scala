@@ -274,7 +274,7 @@ object TimeSeriesOps {
   // -------------------------------------------------------------------
   /** Exact-cents residual of every sample against the 3-sample median
     * filter — the shared base both sigma-clip rounds re-consume. A
-    * canonical plan instance so a Bench-warmed persisted copy
+    * canonical plan instance so a persisted copy
     * CacheManager-substitutes into all three aggregation passes (the
     * scan + per-series window sort otherwise run once per pass). */
   def noiseResidue(spark: SparkSession, dir: String): DataFrame = {
@@ -350,7 +350,7 @@ object TimeSeriesOps {
   /** Shared 6h-binned, per-series-demeaned base of BOTH ACF estimators
     * (biased `tsAcf` and pair-count-corrected `tsAcfUnbiased`): one
     * canonical plan instance so a persisted copy substitutes into
-    * every consumer (Bench warms it as a materialized view). */
+    * every consumer as a materialized view. */
   def acfDemeaned(spark: SparkSession, dir: String): DataFrame = {
     val binned = Tables.series(spark, dir)
       .groupBy(col("id"), floor(col("t") / lit(21600.0)).as("bin"))

@@ -75,7 +75,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // RangeJoinAuto.scala: plan-choice statistics — two one-row
     // aggregate reads over the smaller join side BEFORE planning (the
     // adaptive-planning pattern); the data path stays distributed
-    val allowCollect = Set("Prof.scala", "Explain.scala", "Replay.scala",
+    val allowCollect = Set("Explain.scala", "Replay.scala",
       "VerifyRecall.scala", "RangeStress.scala", "RangeJoinAuto.scala")
     val bad = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's shared-scan warm-up persists one instance of each heavy
-  * intermediate and relies on CacheManager substituting it into every
-  * later canonically-equal subplan. That only works if two invocations
+/** Canonical equality is what lets Spark's CacheManager substitute a
+  * persisted instance of a heavy intermediate into every later subplan
+  * that computes the same thing. That only works if two invocations
   * of the same operator build `sameResult` plans — which a capturing
   * lambda inside perSeries silently breaks (fresh closure instance per
   * call → different MapGroups.func → no substitution, and the "cached"
