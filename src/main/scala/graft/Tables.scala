@@ -41,9 +41,9 @@ object Tables {
     *    DuckDB applies reading ns into its µs timestamps;
     *  - parquet timestamp[us] resolves as TIMESTAMP / TIMESTAMP_NTZ →
     *    `unix_micros` (exact: Spark stores timestamps as µs-since-epoch
-    *    internally, and the session TZ is pinned to UTC in the
-    *    mains, specs and benchmark so the NTZ→instant cast is the
-    *    identity).
+    *    internally, and [[graft.Session]] pins the session TZ to UTC
+    *    — perfbench's settings.json sets the same — so the
+    *    NTZ→instant cast is the identity).
     *
     * Both branches land on the identical integer µs that DuckDB's
     * `epoch_us(ts)` oracle twin produces, so `t = µs / 1e6` stays

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // if the testdata generator ships timestamp[ns] parquet again,
-      // read it as a raw ns long (Tables.tsMicros handles both dtypes)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep gls_fap's 104-buffer aggregate inside whole-stage codegen
-      .config("spark.sql.codegen.maxFields", "300")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // AQE coalesces by BYTES, but per-series kernels (IIR/sift/
-      // Cholesky) are CPU-heavy at tiny byte sizes: the default 1 MB
-      // floor serializes them onto 1-2 threads; inert at real scale
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+    val spark = Session.builder()
       // local-harness shuffle hygiene (sort writer: 1 data + 1 index
       // file per map task instead of one per reducer; RAM-backed
       // scratch when present) — the dump is untimed but the driver
@@ -28,24 +13,16 @@ object Verify {
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // per-JVM RAM scratch + stale-run sweep (round 15, Scratch.scala)
       .config("spark.local.dir", Scratch.localDir())
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for targeted dev iteration
-    // (the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     // Failures must be first-class: a query that throws used to leave
     // only a stderr line, and the driver's correctness artifact then
     // silently OMITTED it (round 7: 89 missing rows read as a short
     // artifact, not 89 failures). Record query → message alongside the
     // dumps so breakage surfaces as err rows.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

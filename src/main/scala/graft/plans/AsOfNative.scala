@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -168,29 +168,6 @@ object AsOfNative {
     }
   }
 
-  /** Idempotently add the strategy to a session the caller does not
-    * own (the driver hands us its SparkSession): `experimental
-    * .extraStrategies` is the public runtime registration point. A
-    * session built by graft itself can instead use builder-time
-    * `.withExtensions(new GraftExtensions)`. */
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(AsOfJoinStrategy))
-      ex.extraStrategies = ex.extraStrategies :+ AsOfJoinStrategy
-    if (!ex.extraOptimizations.contains(AsOfKeyPushdown)) {
-      // extraOptimizations run as the LAST optimizer batch (fixed
-      // point over just these rules), after the standard pushdown
-      // batch is done — so pair the as-of rule with Catalyst's own
-      // PushDownPredicates to carry the re-positioned filter the rest
-      // of the way to the scan. Builder-time injection
-      // (GraftExtensions) lands in the operator-optimization batch
-      // instead and needs no companion.
-      ex.extraOptimizations = ex.extraOptimizations ++
-        Seq(AsOfKeyPushdown,
-          org.apache.spark.sql.catalyst.optimizer.PushDownPredicates)
-    }
-  }
-
   /** Left as-of join with the same surface as [[AsOf.join]]: for every
     * probe row, the most recent `ref` row with ref.time <= probe.time
     * within the same key; `valueCols` arrive as `asof_<name>` plus the
@@ -198,7 +175,7 @@ object AsOfNative {
   def join(probe: DataFrame, ref: DataFrame, key: String, time: String,
       valueCols: Seq[String]): DataFrame = {
     val spark = probe.sparkSession
-    ensureRegistered(spark)
+    Session.setup(spark)
     val lPlan = probe.queryExecution.analyzed
     val rPlan = ref.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -195,14 +195,6 @@ object RangeJoinNative {
     }
   }
 
-  /** Idempotent runtime registration for caller-owned sessions (the
-    * driver's) — the [[AsOfNative.ensureRegistered]] device. */
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(RangeJoinStrategy))
-      ex.extraStrategies = ex.extraStrategies :+ RangeJoinStrategy
-  }
-
   /** Inner interval-containment join with the same surface as
     * [[RangeJoin.binned]]: probe rows (point `time`) against `ref`
     * intervals [`lo`, `hi`] (inclusive) sharing `key`; output = all
@@ -210,7 +202,7 @@ object RangeJoinNative {
   def join(probe: DataFrame, ref: DataFrame, key: String, time: String,
       lo: String, hi: String, valueCols: Seq[String]): DataFrame = {
     val spark = probe.sparkSession
-    ensureRegistered(spark)
+    Session.setup(spark)
     val lPlan = probe.queryExecution.analyzed
     val rPlan = ref.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -80,12 +80,7 @@ object CorpusGen {
     val out = if (args.length > 0) args(0) else "target/tmp/corpus10x"
     val nDocs = if (args.length > 1) args(1).toLong else 50000L
     val nVecs = if (args.length > 2) args(2).toLong else 20000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // 4th arg "skew" → the adversarial variant (nDocs = base size,
     // nVecs reused as the hot-cluster size)

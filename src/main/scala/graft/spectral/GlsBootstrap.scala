@@ -72,8 +72,8 @@ object GlsBootstrap {
   }
 
   // NOTE: the trig sums run as ONE imperative primitive-array
-  // aggregate (GlsTrigSums → ObjectHashAggregateExec). The owning
-  // sessions raise spark.sql.objectHashAggregate.sortBased
+  // aggregate (GlsTrigSums → ObjectHashAggregateExec). graft.Session
+  // raises spark.sql.objectHashAggregate.sortBased
   // .fallbackThreshold (default 128 in-memory keys) so the ~1200
   // (id, b) groups per partition stay hash-aggregated; with the
   // default the op silently degrades to sort-based aggregation —

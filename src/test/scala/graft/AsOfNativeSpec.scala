@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.{AsOf, AsOfNative}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * against the DuckDB ASOF JOIN oracle via the driver — and its
   * physical plan must be the sort-merge shape: one exchange per side,
   * the custom exec present, no window or union. */
-class AsOfNativeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfNativeSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

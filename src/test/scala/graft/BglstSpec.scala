@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * trend term in its model) is confounded toward the longest grid
   * periods — the published motivation for BGLST (Olspert et al. 2018).
   */
-class BglstSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BglstSpec extends AnyFunSuite with GraftSpark {
 
   private val T0 = 1.704067200e9 // 2024-01-01
   private val P = 432000.0       // 5 d — exactly grid k = 6 (30 d / 5 d)

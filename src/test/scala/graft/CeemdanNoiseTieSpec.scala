@@ -1,7 +1,6 @@
 package graft
 
 import graft.tsa.SeriesOps2
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `ceemdan_dump` hash gate demands FULL bit-equality, yet the
@@ -16,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * testdata refresh that mints a near-tie draw fails HERE, loudly,
   * instead of silently breaking the driver's hash gate.
   */
-class CeemdanNoiseTieSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CeemdanNoiseTieSpec extends AnyFunSuite with GraftSpark {
 
   // Same margin scale as the gate's documented risk analysis: ties
   // flip under ~1e-9 drift, so 1e-6 clearance is 3 orders of safety.

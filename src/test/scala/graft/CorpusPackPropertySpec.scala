@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.CorpusOps
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Test.{check, Parameters}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sparse doc_ids (chunks of unequal size) and docs longer than a
   * whole bin (multi-boundary straddles).
   */
-class CorpusPackPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusPackPropertySpec extends AnyFunSuite with GraftSpark {
 
   private val B = 512
 

@@ -1,19 +1,12 @@
 package graft
 
 import graft.functions.CosineSim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused CosineSim expression matches the composed zip_with /
   * aggregate formulation (both codegen'd and interpreted paths). */
-class CosineSimSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CosineSimSpec extends AnyFunSuite with GraftSpark {
 
   test("cosine_sim matches zip_with dot product on embeddings") {
     CosineSim.register(spark)

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The band-bucket self-joins must stay bounded under bucket skew: a
   * hot bucket of k near-identical docs may contribute at most
   * cap·(cap−1)/2 candidate pairs, not k², because bucket occupancy is
   * capped at the first `cap` members in deterministic doc_id order. */
-class DedupSkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSkewSpec extends AnyFunSuite with GraftSpark {
 
   /** A corpus of k identical documents: every minhash band bucket (and
     * every simhash band bucket) holds all k docs — the worst case. */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** dedup_substring semantics (Lee et al. 2021 re-expression): a run of
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * span; overlapping gram hits merge into one maximal span; within-doc
   * repetition alone does not count; disjoint shared runs stay
   * separate spans. */
-class DedupSubstringSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSubstringSpec extends AnyFunSuite with GraftSpark {
 
   private def corpus(docs: Seq[String]): String = {
     import spark.implicits._

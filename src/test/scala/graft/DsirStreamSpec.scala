@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Stream–static DSIR scoring twin: the row-local feature mirror must
   * be bit-identical to the batch pipeline, and replaying the corpus
   * through the stream must reproduce the batch weights exactly. */
-class DsirStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DsirStreamSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * series (just past the 65525 cap) must throw with the guard's
   * message, and a full-size in-cap series must still answer.
   */
-class GlOddsGuardSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlOddsGuardSpec extends AnyFunSuite with GraftSpark {
 
   /** One user with `n` samples at 1000 s cadence, written as an
     * events.parquet temp dir consumable by Tables.series. */

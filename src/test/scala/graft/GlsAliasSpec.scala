@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,14 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * trend at cycle amplitude 1.0, so the pinned point sits mid-
   * plateau, not on a knife edge.)
   */
-class GlsAliasSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlsAliasSpec extends AnyFunSuite with GraftSpark {
 
   private val Day = 86400.0
   private val T0 = 1.704067200e9 // 2024-01-01

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Verbatim-analog ports of the reference's GLS default-grid tests
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    unit-spaced samples peaks at period 10.0 exactly (the true
   *    frequency lands ON the auto grid: f = fmin + 49·df).
   */
-class GlsAutoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlsAutoSpec extends AnyFunSuite with GraftSpark {
 
   /** user 21: 26 samples at 0.1 s (the reference's grid fixture —
     * baseline 2.5 s, fs = 10 Hz); user 22: sin(2π·k/10) over 100

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.GlsTrigSums
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulation it replaced: per-harmonic averages of y·cos(kωt),
   * y·sin(kωt) (and the signal-independent c/s/double-angle moments)
   * against 2·NF separate `avg` expressions over direct trig calls. */
-class GlsTrigSumsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GlsTrigSumsSpec extends AnyFunSuite with GraftSpark {
 
   private val Nf = 7
   private val Om = 2.0 * math.Pi * 1.7e-6

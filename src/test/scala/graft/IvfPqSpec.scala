@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.{IvfPq, Pq, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the composed search must still recover most of the exact-L2
   * top-5 despite scoring only NPROBE/NC of the corpus from compressed
   * codes. */
-class IvfPqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IvfPqSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

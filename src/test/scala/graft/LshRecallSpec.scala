@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Minhash-LSH recall under the bucket-occupancy cap, brute-forced at
@@ -16,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * = 256) pins that the measurement DETECTS cap pruning loudly: the
   * loss is exactly 1 − C(256,2)/C(300,2), the >1% condition the
   * VerifyRecall main warns on. */
-class LshRecallSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LshRecallSpec extends AnyFunSuite with GraftSpark {
 
   /** Row-local mirror of the shingle pipeline (the bandKeysOf
     * tokenization: lowercase space-split non-empty, distinct word

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are bit-identical to the batch minhash band pipeline over the full
   * sf0.001 corpus, and (2) near-duplicates are detected across
   * micro-batches through keyed bucket state. */
-class MinhashStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinhashStreamSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-built NEP-1 files, element-range partition splits, column
   * pruning, and the SpottedStar-style (3, n) unpack into the series
   * table shape (reference data/__init__.py:6). */
-class NpySourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NpySourceSpec extends AnyFunSuite with GraftSpark {
 
   private def npyBytes(descr: String, shape: String,
       fill: ByteBuffer => Unit, payloadLen: Int): Array[Byte] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Oracle SQL strings that use constant ranges where DuckDB cannot
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (text_fingerprint's 16384-char position constant is GONE — round
   * 14 replaced it with a per-doc string_split + lead-window form that
   * is linear and uncapped; see TextOps.textFingerprintSql.) */
-class OracleConstantsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OracleConstantsSpec extends AnyFunSuite with GraftSpark {
 
   private val dirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the event TIMES themselves (GL, whose native domain is event
   * arrivals, not magnitudes).
   */
-class PhaseFold2Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PhaseFold2Spec extends AnyFunSuite with GraftSpark {
 
   private val T0 = 1.704067200e9 // 2024-01-01
   private val P = 172800.0       // 2 d — exactly grid j = 8 (6 h · 8)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.Pii
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PII scrub semantics, pinned against RE2-verified expected values:
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * patterns, so this spec IS the Java-vs-RE2 dialect parity check —
   * the driver corpus contains no PII, so the hash gate alone would
   * never exercise the match paths. */
-class PiiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PiiSpec extends AnyFunSuite with GraftSpark {
 
   // (text, n_email, n_phone, n_ip, redacted) — expected side generated
   // by DuckDB 1.x (RE2) on the same patterns

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,14 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      monster doc (its mass lands in the bins like any other).
   * The in-suite corpus is a 5 000-doc base + 10 000-member hot
   * cluster (the SCALING.md skew rows carry the full 50k+100k run). */
-class PipelineSkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSkewSpec extends AnyFunSuite with GraftSpark {
 
   private lazy val dir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_skew").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,15 +13,7 @@ import scala.jdk.CollectionConverters._
   * audits rely on: no driver-side collect() and no Scala UDFs in
   * main sources.
   */
-class PlanGuardSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.codegen.maxFields", "300")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanGuardSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -96,5 +87,16 @@ class PlanGuardSpec extends AnyFunSuite {
         else None
       }.toList
     assert(bad.isEmpty, s"convention violations: $bad")
+  }
+
+  test("sessions are built only in Session.scala") {
+    val builder = "SparkSession" + ".builder()" // not a hit itself
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          java.nio.file.Files.readString(p).contains(builder))
+        .map(_.getFileName.toString)
+    }
+    assert(hits == Seq("Session.scala"), s"session builders outside Session: $hits")
   }
 }

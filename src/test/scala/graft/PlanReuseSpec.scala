@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Canonical equality is what lets Spark's CacheManager substitute a
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lambda inside perSeries silently breaks (fresh closure instance per
   * call → different MapGroups.func → no substitution, and the "cached"
   * query recomputes from scratch). This spec pins the invariant. */
-class PlanReuseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanReuseSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.Pq
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * table must be a complete compressed index, and the two-stage
   * search (ADC shortlist → exact re-rank) must recover most of the
   * exact-L2 top-5. */
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.{Dsir, Quality}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * entropy against hand-computed values, CCNet bucket monotonicity,
   * DSIR's target-model preference, and the Gumbel-top-k sample being
   * exactly the weight-ordered head of the corpus. */
-class QualityDsirSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityDsirSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered query runs on sf0.001 and produces a sane frame;
   * semantic spot checks on a few operators. The full value-level gate
   * is the driver's DuckDB oracle (tools/check_oracle.py). */
-class QueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // keep gls_fap's 104-buffer aggregate inside whole-stage codegen
-    .config("spark.sql.codegen.maxFields", "300")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueriesSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -3,21 +3,13 @@ package graft
 import graft.plans.{RangeJoin, RangeJoinAuto, RangeJoinNative}
 import graft.plans.RangeJoinAuto.{BinnedAtWidth, BinnedCoarse, NativeSweep, RefStats}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The dispatcher must (a) route each measured workload shape
   * (SCALING.md round 14, `graft.RangeStress`) to the formulation that
   * survives it at scale, and (b) never change the row set — the
   * choice is a physical-plan property only. */
-class RangeJoinAutoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinAutoSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

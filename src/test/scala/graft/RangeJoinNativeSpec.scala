@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.{RangeJoin, RangeJoinNative}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * physical plan must be the sort-merge shape: one hash exchange per
   * side, the custom exec present, no bin explode, no nested-loop or
   * cartesian fallback. */
-class RangeJoinNativeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinNativeSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

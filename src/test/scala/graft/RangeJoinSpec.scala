@@ -1,21 +1,13 @@
 package graft
 
 import graft.plans.RangeJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The binned range join must agree with the direct inequality-join
   * formulation (which Spark plans as a nested loop — correct but
   * unscalable) and must itself plan as an equi-join. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,14 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    frequency step (gls_autogrid is the operator that consumes
   *    baseline, GlsAuto.scala:12).
   */
-class RefCoreParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RefCoreParitySpec extends AnyFunSuite with GraftSpark {
 
   private val T0 = 1.704067200e9
 

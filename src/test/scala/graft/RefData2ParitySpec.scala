@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,16 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * auto grid. Cancels (rather than fails) when the reference checkout
   * is absent — the engine itself never depends on it.
   */
-class RefData2ParitySpec extends AnyFunSuite {
+class RefData2ParitySpec extends AnyFunSuite with GraftSpark {
 
   private val dataDir = "/root/reference/src/periodicity/data"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Load a (2, N) fixture (row 0 = t, row 1 = y), mask y < `badBelow`
     * as NA, apply the ts_interpolate_na ffill (bfill for the leading

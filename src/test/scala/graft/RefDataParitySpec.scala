@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,17 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Cancels (rather than fails) when the reference checkout is absent —
   * the engine itself never depends on it.
   */
-class RefDataParitySpec extends AnyFunSuite {
+class RefDataParitySpec extends AnyFunSuite with GraftSpark {
 
   private val npyPath =
     "/root/reference/src/periodicity/data/spotted_star.npy"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** spotted_star.npy is (3, 2148): rows t [days], y, dy. Pivot to
     * samples and write a temp events.parquet with ts = t·tsScale ns —

@@ -2,7 +2,7 @@ package graft
 
 import graft.dedup.Dedup
 import graft.text.Pipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recomputes instead of reading the previous pass's table: after a
   * release the held Dataset is unpersisted, and the next lookup builds
   * and persists a new one. */
-class ReleaseHooksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleaseHooksSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus replay must reproduce the batch clean output exactly, and
   * a NEW doc carrying known boilerplate must be scrubbed on arrival
   * (the deny-list posture). */
-class SegStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SegStreamSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -3,7 +3,6 @@ package graft
 import graft.sim.SemDedup
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{SemDrop, Vec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mirror lands on the batch plan's exact cells and centroid cosines
   * over the whole corpus, (2) the drop events accumulated across
   * micro-batches equal the batch `dedup_semantic` loser set. */
-class SemanticStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemanticStreamSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * downstream): the fact side salts its key, the dim side replicates
   * per salt, and the result is IDENTICAL to the unsalted join.
   */
-class SkewJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewJoinSpec extends AnyFunSuite with GraftSpark {
 
   private val Salts = 8
 

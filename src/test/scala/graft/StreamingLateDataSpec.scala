@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{Doc, Event, SemDrop, Vec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * specs replay IN-ORDER streams; these pin what each twin guarantees
   * — and documents it cannot guarantee — when arrival order breaks.
   */
-class StreamingLateDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingLateDataSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

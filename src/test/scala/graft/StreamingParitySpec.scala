@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Event
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,15 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * decontamination and LM-score pins in StreamingSpec) to the three
   * STATEFUL twins, so all nine are parity-pinned, not example-tested.
   */
-class StreamingParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingParitySpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{Event, Vec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,15 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fault-tolerant file sink with its exactly-once commit log), not
   * the non-fault-tolerant memory sink, so recovery covers sink
   * idempotence too — the production restart path end to end. */
-class StreamingRestartSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingRestartSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

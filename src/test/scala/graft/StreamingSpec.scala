@@ -2,20 +2,12 @@ package graft
 
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Event
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming twins driven synchronously via MemoryStream. */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with GraftSpark {
 
   private def ts(minute: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * selector must favour wide spans on the smooth series but tighten
   * on a series with a sharp local feature.
   */
-class SupersmoothSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SupersmoothSpec extends AnyFunSuite with GraftSpark {
 
   private val T0 = 1.704067200e9
   private val P = 1728000.0 // 20 d — slow against the 2 h sampling

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Recovery assertions over the generated reference-signal sources
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's own tests/demos key off. (The value-level gate is the
   * DuckDB hash compare; these pin the SEMANTICS.)
   */
-class SyntheticDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SyntheticDataSpec extends AnyFunSuite with GraftSpark {
 
   private def signal(df: org.apache.spark.sql.DataFrame): Array[Double] =
     df.orderBy("n").collect().map(_.getDouble(1))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic recovery tests on synthetic series with KNOWN structure:
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tones. (The DuckDB oracle cannot check these mapGroups ops, so
   * these specs are their correctness gate.)
   */
-class SyntheticSeriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SyntheticSeriesSpec extends AnyFunSuite with GraftSpark {
 
   private val T0 = 1.704067200e9 // 2024-01-01, matches the wavelet grid
   private val P1 = 172800.0      // 2 d sinusoid (GP target, grid j=4)
