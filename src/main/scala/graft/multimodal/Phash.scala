@@ -77,12 +77,14 @@ object Phash {
   // to ~8M docs at a Hamming ≤ 3 guarantee; past that, a longer
   // signature (e.g. 120-bit/two-word phash, 8×15 bands — Manku et
   // al. 2007's geometry for 8B pages) is the production path, the
-  // same plan shape throughout. The registered query pins the 6×10
-  // default; VerifyPhash hash-gates the widened geometry on the
-  // 10×/100× corpora.
+  // same plan shape throughout. The registered query and its oracle
+  // pin the 6×10 default; PhashSpec runs the widened 4×15 geometry.
   // -------------------------------------------------------------------
+  private val Bands = 6
+  private val BandBits = 10
+
   def multimodalPhashPairs(spark: SparkSession, dir: String): DataFrame =
-    multimodalPhashPairs(spark, dir, 6, 10)
+    multimodalPhashPairs(spark, dir, Bands, BandBits)
 
   def multimodalPhashPairs(spark: SparkSession, dir: String,
       nBands: Int, bandBits: Int): DataFrame = {
@@ -113,10 +115,10 @@ object Phash {
       .distinct()
   }
 
-  def multimodalPhashPairsSqlFor(nBands: Int, bandBits: Int): String = {
-    val mask = 1L << bandBits
-    val bandSel = (0 until nBands).map(b =>
-      s"SELECT doc_id, phash, ${b}::BIGINT AS band, (phash >> ${bandBits * b}) % $mask AS bkey FROM sig")
+  val multimodalPhashPairsSql: String = {
+    val mask = 1L << BandBits
+    val bandSel = (0 until Bands).map(b =>
+      s"SELECT doc_id, phash, ${b}::BIGINT AS band, (phash >> ${BandBits * b}) % $mask AS bkey FROM sig")
       .mkString("\n       | UNION ALL ")
     s"""WITH sig AS ($multimodalPhashSql),
        |bands0 AS ($bandSel),
@@ -129,8 +131,6 @@ object Phash {
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id""".stripMargin
   }
-
-  val multimodalPhashPairsSql: String = multimodalPhashPairsSqlFor(6, 10)
 
   // -------------------------------------------------------------------
   // multimodal_phash_wide — the 120-bit two-word signature, the

@@ -75,12 +75,12 @@ object SemDedup {
   /** Coarse codebook: KC seeds → argmin assign → one Lloyd step of
     * exact integer-µ component means. (code, i, cv). Every seed
     * assigns to itself at distance 0, so no cell empties. */
-  private[graft] def coarseCentroids(spark: SparkSession, dir: String,
-      kc: Int = KC): DataFrame =
-    coarseCentroidsFrom(comps(spark, dir), kc)
+  private[graft] def coarseCentroids(spark: SparkSession,
+      dir: String): DataFrame =
+    coarseCentroidsFrom(comps(spark, dir))
 
-  private def coarseCentroidsFrom(c: DataFrame, kc: Int): DataFrame = {
-    val seeds = c.filter(col("vec_id") < kc)
+  private def coarseCentroidsFrom(c: DataFrame): DataFrame = {
+    val seeds = c.filter(col("vec_id") < KC)
       .select(col("vec_id").as("code"), col("i"),
         (col("rc").cast("double") / 1000000.0).as("cv"))
     val d0 = c.join(broadcast(seeds), Seq("i"))
@@ -96,10 +96,10 @@ object SemDedup {
       .agg((sum("rc").cast("double") / count(lit(1)) / 1000000.0).as("cv"))
   }
 
-  private def coarseCentroidsSql(kc: Int): String =
+  private val coarseCentroidsSql: String =
     s"""seeds AS (SELECT vec_id AS code, i,
        |    cast(rc AS double) / 1000000.0 AS cv
-       |  FROM cq WHERE vec_id < $kc),
+       |  FROM cq WHERE vec_id < $KC),
        |d0 AS (SELECT c.vec_id, s.code,
        |    sum(pow(cast(c.rc AS double) / 1000000.0 - s.cv, 2)) AS dist
        |  FROM cq c JOIN seeds s ON s.i = c.i
@@ -117,9 +117,9 @@ object SemDedup {
 
   /** Coarse assignment (vec_id, code): micro-unit integer L2² argmin
     * against the refined coarse centroids, code tiebreak. */
-  private[graft] def coarseAssign(spark: SparkSession, dir: String,
-      kc: Int = KC): DataFrame =
-    coarseAssignFrom(comps(spark, dir), kc)
+  private[graft] def coarseAssign(spark: SparkSession,
+      dir: String): DataFrame =
+    coarseAssignFrom(comps(spark, dir))
 
   /** Shared-subtree variants: the multi-tier builders thread ONE comps
     * Dataset instance through every tier — plan shape (and canonical
@@ -127,8 +127,8 @@ object SemDedup {
     * analyzes each deep subtree once instead of once per tier (the
     * ann_ivf_topk round-12 lesson: repeated analysis of a deep
     * quantizer tree is a constant ~0.3 s driver tax per rebuild). */
-  private def coarseAssignFrom(c: DataFrame, kc: Int): DataFrame =
-    coarseAssignFromCents(c, coarseCentroidsFrom(c, kc))
+  private def coarseAssignFrom(c: DataFrame): DataFrame =
+    coarseAssignFromCents(c, coarseCentroidsFrom(c))
 
   private def coarseAssignFromCents(c: DataFrame,
       cents: DataFrame): DataFrame = {
@@ -157,18 +157,17 @@ object SemDedup {
   /** Fine codebook per coarse cell: KF seeds = the cell's KF lowest
     * vec_ids (window rank, in-plan), one Lloyd step restricted to the
     * cell. (code, f, i, cv) — ≤ KC·KF·d rows, broadcast-size. */
-  private[graft] def fineCentroids(spark: SparkSession, dir: String,
-      kc: Int = KC, kf: Int = KF): DataFrame = {
+  private[graft] def fineCentroids(spark: SparkSession,
+      dir: String): DataFrame = {
     val c = comps(spark, dir)
-    fineCentroidsFrom(c, coarseAssignFrom(c, kc), kf)
+    fineCentroidsFrom(c, coarseAssignFrom(c))
   }
 
-  private def fineCentroidsFrom(c: DataFrame, asgC: DataFrame,
-      kf: Int): DataFrame = {
+  private def fineCentroidsFrom(c: DataFrame, asgC: DataFrame): DataFrame = {
     val mem = c.join(asgC, Seq("vec_id")) // (vec_id, code, i, rc)
     val wCell = Window.partitionBy("code").orderBy("vec_id")
     val fs = asgC.withColumn("f", row_number().over(wCell) - 1)
-      .filter(col("f") < kf)
+      .filter(col("f") < KF)
     val fseed = c.join(fs, Seq("vec_id"))
       .select(col("code"), col("f"), col("i"),
         (col("rc").cast("double") / 1000000.0).as("cv"))
@@ -185,12 +184,12 @@ object SemDedup {
       .agg((sum("rc").cast("double") / count(lit(1)) / 1000000.0).as("cv"))
   }
 
-  private def fineCentroidsSql(kf: Int): String =
+  private val fineCentroidsSql: String =
     s"""fs AS (SELECT vec_id, code,
        |    row_number() OVER (PARTITION BY code ORDER BY vec_id) - 1 AS f
        |  FROM asgC
        |  QUALIFY row_number() OVER (PARTITION BY code ORDER BY vec_id)
-       |    <= $kf),
+       |    <= $KF),
        |fseed AS (SELECT fs.code, fs.f, c.i,
        |    cast(c.rc AS double) / 1000000.0 AS cv
        |  FROM cq c JOIN fs ON fs.vec_id = c.vec_id),
@@ -216,12 +215,11 @@ object SemDedup {
     * centroid], c2c [cosine to own fine centroid, 6 dp]). Each vector
     * scores ONLY its own coarse cell's ≤ KF fine centroids — the
     * (code, i) join key is the probe restriction. */
-  private[graft] def assign(spark: SparkSession, dir: String,
-      kc: Int = KC, kf: Int = KF): DataFrame = {
+  private[graft] def assign(spark: SparkSession, dir: String): DataFrame = {
     val c = comps(spark, dir)
-    val asgC = coarseAssignFrom(c, kc)
+    val asgC = coarseAssignFrom(c)
     val mem = c.join(asgC, Seq("vec_id"))
-    val fcents = fineCentroidsFrom(c, asgC, kf)
+    val fcents = fineCentroidsFrom(c, asgC)
     val cn = fcents.groupBy("code", "f")
       .agg(sqrt(sum(pow(col("cv"), 2.0))).as("cnrm"))
     val vn = c.groupBy("vec_id")
@@ -242,20 +240,20 @@ object SemDedup {
       .join(broadcast(cn), Seq("code", "f"))
       .join(vn, Seq("vec_id"))
       .select(col("vec_id"),
-        (col("code") * kf + col("f")).as("cluster"), col("dist_u"),
+        (col("code") * KF + col("f")).as("cluster"), col("dist_u"),
         round(when(col("vnrm") * col("cnrm") === 0.0, 0.0)
           .otherwise(col("dot") / (col("vnrm") * col("cnrm"))), 6)
           .as("c2c"))
   }
 
-  /** The full codebook+assignment CTE chain for a given (kc, kf) —
-    * ends at `asg(vec_id, cluster, dist_u, c2c)`, the same contract
-    * the flat round-11 oracle exposed, so the emb_kmeans /
-    * dedup_semantic tails compose unchanged. */
-  private def assignSqlFor(kc: Int, kf: Int): String =
-    s"""${coarseCentroidsSql(kc)},
+  /** The full codebook+assignment CTE chain — ends at `asg(vec_id,
+    * cluster, dist_u, c2c)`, the same contract the flat round-11
+    * oracle exposed, so the emb_kmeans / dedup_semantic tails compose
+    * unchanged. */
+  private val assignSql: String =
+    s"""$coarseCentroidsSql,
        |$coarseAssignSql,
-       |${fineCentroidsSql(kf)},
+       |$fineCentroidsSql,
        |cn AS (SELECT code, f, sqrt(sum(cv * cv)) AS cnrm
        |  FROM fcents GROUP BY 1, 2),
        |vn AS (SELECT vec_id,
@@ -268,7 +266,7 @@ object SemDedup {
        |  FROM mem m JOIN fcents ct ON ct.code = m.code AND ct.i = m.i
        |  GROUP BY 1, 2, 3),
        |asg AS MATERIALIZED (SELECT d.vec_id,
-       |    d.code * $kf + d.f AS cluster, d.dist_u,
+       |    d.code * $KF + d.f AS cluster, d.dist_u,
        |    round(CASE WHEN v.vnrm * n.cnrm = 0 THEN 0.0
        |               ELSE d.dot / (v.vnrm * n.cnrm) END, 6) AS c2c
        |  FROM (SELECT vec_id, code, f, dist_u, dot, row_number() OVER (
@@ -287,12 +285,12 @@ object SemDedup {
     * KC·d rows, assignment 1 row/vector) inside the timed region makes
     * each tier compute once; values are identical (same plans, just
     * persisted). Caller must invoke the returned release. */
-  private[graft] def centroidsShared(spark: SparkSession, dir: String,
-      kc: Int = KC, kf: Int = KF): (DataFrame, DataFrame, () => Unit) = {
+  private[graft] def centroidsShared(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, () => Unit) = {
     val c = comps(spark, dir)
-    val cents = coarseCentroidsFrom(c, kc).persist()
+    val cents = coarseCentroidsFrom(c).persist()
     val asgC = coarseAssignFromCents(c, cents).persist()
-    val fine = fineCentroidsFrom(c, asgC, kf)
+    val fine = fineCentroidsFrom(c, asgC)
     (cents, fine, () => { cents.unpersist(); asgC.unpersist(); () })
   }
 
@@ -300,37 +298,27 @@ object SemDedup {
     * member count and inertia (exact micro-unit integer sum of the
     * rounded L2² distances, so the cross-engine sum order is moot). */
   def embKmeans(spark: SparkSession, dir: String): DataFrame =
-    embKmeansAt(spark, dir, KC, KF)
-
-  private[graft] def embKmeansAt(spark: SparkSession, dir: String,
-      kc: Int, kf: Int): DataFrame =
-    assign(spark, dir, kc, kf)
+    assign(spark, dir)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("size"),
         (sum("dist_u").cast("double") / 1000000.0).as("inertia"))
 
-  private[graft] def embKmeansSqlFor(kc: Int, kf: Int): String =
+  val embKmeansSql: String =
     s"""WITH $compsSql,
-       |${assignSqlFor(kc, kf)}
+       |$assignSql
        |SELECT cluster, count(*) AS size,
        |  cast(sum(dist_u) AS double) / 1000000.0 AS inertia
        |FROM asg GROUP BY 1""".stripMargin
-
-  val embKmeansSql: String = embKmeansSqlFor(KC, KF)
 
   /** dedup_semantic — per vector: its cell, its centroid cosine, and
     * whether SemDeDup keeps it. Within each (occupancy-capped) cell,
     * pairs with cosine ≥ τ mark ONE loser: the member with the HIGHER
     * centroid cosine (rounded 6 dp), vec_id as the tiebreak — keep =
     * the vector loses no pair. */
-  def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
-    dedupSemanticAt(spark, dir, KC, KF)
-
-  private[graft] def dedupSemanticAt(spark: SparkSession, dir: String,
-      kc: Int, kf: Int): DataFrame = {
+  def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.CosineSim.register(spark)
     val emb = Tables.table(spark, dir, "embeddings")
-    val a = assign(spark, dir, kc, kf)
+    val a = assign(spark, dir)
     val w = Window.partitionBy("cluster").orderBy("vec_id")
     // cap BEFORE the self-join: rank-limit runs as a WindowGroupLimit
     // under the pair exchange, so a hot cell can never square
@@ -362,14 +350,14 @@ object SemDedup {
   // absorbs. Scoring the QUANTIZED cq components here instead would
   // sit a ~1e-7 disagreement against the 1e-6 rounding grid — a
   // boundary flip waiting for a corpus.
-  private[graft] def dedupSemanticSqlFor(kc: Int, kf: Int): String =
+  val dedupSemanticSql: String =
     s"""WITH $compsSql,
        |cr AS (
        |  SELECT vec_id, idx - 1 AS i, cast(v AS double) AS v FROM (
        |    SELECT vec_id, generate_subscripts(embedding, 1) AS idx,
        |           unnest(embedding) AS v
        |    FROM embeddings)),
-       |${assignSqlFor(kc, kf)},
+       |$assignSql,
        |cap AS (SELECT vec_id, cluster, c2c FROM asg
        |  QUALIFY row_number() OVER (PARTITION BY cluster ORDER BY vec_id)
        |    <= $MaxCluster),
@@ -394,8 +382,6 @@ object SemDedup {
        |  (l.vec_id IS NULL) AS keep
        |FROM asg a LEFT JOIN losers l ON l.vec_id = a.vec_id"""
       .stripMargin
-
-  val dedupSemanticSql: String = dedupSemanticSqlFor(KC, KF)
 
   // -------------------------------------------------------------------
   // Row-local Scala mirrors for the STREAMING twin (the
@@ -448,13 +434,13 @@ object SemDedup {
     * restriction, mirrored. */
   private[graft] def assignOf(emb: Array[Float],
       coarse: Array[(Long, Array[Double])],
-      fine: Array[(Long, Array[Double])], kf: Int = KF): (Long, Double) = {
+      fine: Array[(Long, Array[Double])]): (Long, Double) = {
     val v = emb.map(f =>
       rnd(f.toDouble * 1000000.0, 0).longValue / 1000000.0)
     val (code, _, _) = argminOf(v, coarse)
-    val mine = fine.filter { case (cl, _) => cl / kf == code }
+    val mine = fine.filter { case (cl, _) => cl / KF == code }
     // rank fine by (dist_u, f): cluster ids within one cell are
-    // code·kf + f, so the id order IS the f order
+    // code·KF + f, so the id order IS the f order
     val (cluster, dot, cnrm) = argminOf(v, mine)
     var vn = 0.0
     v.foreach(x => vn += x * x)

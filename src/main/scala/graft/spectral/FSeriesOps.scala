@@ -49,10 +49,7 @@ object FSeriesOps {
   }
 
   private val peaksWithBoundsSql: String =
-    s"""${Gls.momentsSql},
-       |${Gls.powerSqlBody},
-       |pg AS (SELECT id, k, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |       FROM t4),
+    s"""${Gls.periodogramSql},
        |pk0 AS (SELECT id, k, power,
        |  lag(power,1)  OVER win AS pm, lead(power,1) OVER win AS pp
        |  FROM pg WINDOW win AS (PARTITION BY id ORDER BY k)),
@@ -83,7 +80,7 @@ object FSeriesOps {
         (round(col("ppow") - greatest(col("lmin"), col("rmin")), 6) +
           lit(0.0)).as("prominence"))
 
-  // peaksWithBoundsSql begins with Gls.momentsSql, which already
+  // peaksWithBoundsSql begins with Gls.periodogramSql, which already
   // carries the WITH keyword.
   val glsPeakProminenceSql: String =
     s"""$peaksWithBoundsSql

@@ -1,7 +1,7 @@
 package graft.spectral
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,7 +67,7 @@ object Gls {
         avg(col("yc") * col("yc")).as("YY"))
   }
 
-  private[spectral] val momentsSql: String =
+  private val momentsSql: String =
     s"""WITH ${centeredSql},
        |mo AS (
        |  SELECT c.id, k.k,
@@ -81,10 +81,19 @@ object Gls {
        |  FROM c CROSS JOIN generate_series(1, ${NF}) AS k(k)
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** Zechmeister–Kürster closed-form power from the trig moments
-    * (mirrors reference spectral.py:109-132 with fit_mean=true). */
-  def glsPeriodogram(spark: SparkSession, dir: String): DataFrame = {
-    val m = moments(spark, dir)
+  /** Zechmeister–Kürster closed form (reference spectral.py:109-132):
+    * the tau rotation and power from a frame of trig moments — C, S,
+    * C2, S2 (the sampling window), Ch, Sh (signal × window) and YY
+    * (signal variance), all weighted means per key. Returns the frame
+    * with the rotation's working columns and the 6 dp `power`; callers
+    * keep their own moment construction and select their keys. The
+    * one Spark statement of the closed form: the batch periodograms,
+    * the bootstrap and the stream twin all read it. The withColumn
+    * chain is deliberate: folding it into one inlined Column would
+    * change how CollapseProject and codegen see the shared
+    * subexpressions (tan2, C2w, Cw, ...), and with them the plans of
+    * the benchmarked periodogram and stream. */
+  def glsPower(m: DataFrame): DataFrame = {
     val tan2 = (col("S2") - lit(2.0) * col("S") * col("C")) /
       (col("C2") - (col("C") * col("C") - col("S") * col("S")))
     val withTau = m.withColumn("tan2", tan2)
@@ -105,29 +114,39 @@ object Gls {
         lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w")) -
           (col("S") * col("Cw") - col("C") * col("Sw")) *
           (col("S") * col("Cw") - col("C") * col("Sw")))
-    p.select(col("id"), col("k"),
-      round((col("YC") * col("YC") / col("CC") +
-        col("YS") * col("YS") / col("SS")) / col("YY"), 6).as("power"))
+    p.withColumn("power", round((col("YC") * col("YC") / col("CC") +
+      col("YS") * col("YS") / col("SS")) / col("YY"), 6))
   }
 
-  private[spectral] val powerSqlBody: String =
-    """t1 AS (SELECT id, k, C, S, Ch, Sh, C2, S2, YY,
-      |  (S2 - 2*S*C) / (C2 - (C*C - S*S)) AS tan2 FROM mo),
-      |t2 AS (SELECT *, 1.0/sqrt(1.0 + tan2*tan2) AS C2w,
-      |  tan2 * (1.0/sqrt(1.0 + tan2*tan2)) AS S2w FROM t1),
-      |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
-      |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2),
-      |t4 AS (SELECT id, k, YY,
-      |  Ch*Cw + Sh*Sw AS YC, Sh*Cw - Ch*Sw AS YS,
-      |  0.5*(1.0 + C2*C2w + S2*S2w) - (C*Cw + S*Sw)*(C*Cw + S*Sw) AS CC,
-      |  0.5*(1.0 - C2*C2w - S2*S2w) - (S*Cw - C*Sw)*(S*Cw - C*Sw) AS SS
-      |  FROM t3)""".stripMargin
+  /** [[glsPower]] as DuckDB CTEs: reads `mo(<keys>, C, S, Ch, Sh, C2,
+    * S2, YY)` and defines `pg(<keys>, power)`. */
+  private[graft] def powerSql(keys: String): String =
+    s"""t1 AS (SELECT $keys, C, S, Ch, Sh, C2, S2, YY,
+       |  (S2 - 2*S*C) / (C2 - (C*C - S*S)) AS tan2 FROM mo),
+       |t2 AS (SELECT *, 1.0/sqrt(1.0 + tan2*tan2) AS C2w,
+       |  tan2 * (1.0/sqrt(1.0 + tan2*tan2)) AS S2w FROM t1),
+       |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
+       |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2),
+       |t4 AS (SELECT $keys, YY,
+       |  Ch*Cw + Sh*Sw AS YC, Sh*Cw - Ch*Sw AS YS,
+       |  0.5*(1.0 + C2*C2w + S2*S2w) - (C*Cw + S*Sw)*(C*Cw + S*Sw) AS CC,
+       |  0.5*(1.0 - C2*C2w - S2*S2w) - (S*Cw - C*Sw)*(S*Cw - C*Sw) AS SS
+       |  FROM t3),
+       |pg AS (SELECT $keys, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
+       |  FROM t4)""".stripMargin
+
+  /** Fixed-grid periodogram, fit_mean=true, uniform weights. */
+  def glsPeriodogram(spark: SparkSession, dir: String): DataFrame =
+    glsPower(moments(spark, dir)).select("id", "k", "power")
+
+  /** The periodogram's CTEs, ending at `pg(id, k, power)`. */
+  private[spectral] val periodogramSql: String =
+    s"""$momentsSql,
+       |${powerSql("id, k")}""".stripMargin
 
   val glsPeriodogramSql: String =
-    s"""$momentsSql,
-       |$powerSqlBody
-       |SELECT id, k, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |FROM t4""".stripMargin
+    s"""$periodogramSql
+       |SELECT id, k, power FROM pg""".stripMargin
 
   /** period_at_highest_peak — reference core.py:952: the period of the
     * highest local maximum of the periodogram. */
@@ -148,10 +167,7 @@ object Gls {
   }
 
   val glsBestPeriodSql: String =
-    s"""$momentsSql,
-       |$powerSqlBody,
-       |pg AS (SELECT id, k, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |       FROM t4),
+    s"""$periodogramSql,
        |pk AS (SELECT id, k, power,
        |  lag(power,1)  OVER win AS pm, lead(power,1) OVER win AS pp
        |  FROM pg WINDOW win AS (PARTITION BY id ORDER BY k)),
@@ -167,8 +183,10 @@ object Gls {
        |GROUP BY peaks.id, best.best_power""".stripMargin
 
   /** Spectral window — reference spectral.py:165 (GLS.window): GLS of
-    * the constant-1 signal with fit_mean=false. Here yc=1, so Ch=C,
-    * Sh=S, YY=1. */
+    * the constant-1 signal with fit_mean=false. With y ≡ 1 and no mean
+    * fit, Ch = avg(cos), Sh = avg(sin), YY = 1 and the mean terms
+    * C = S = 0 drop out of the closed form — the same IEEE
+    * computation as the fit_mean=false formula written out. */
   def glsWindow(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.series(spark, dir)
     val t0 = s.groupBy("id").agg(min("t").as("t0"))
@@ -180,22 +198,10 @@ object Gls {
         cos(omega).as("cw"), sin(omega).as("sw"),
         cos(omega * 2.0).as("c2w"), sin(omega * 2.0).as("s2w"))
       .groupBy("id", "k")
-      .agg(avg("cw").as("C"), avg("sw").as("S"),
-        avg("c2w").as("C2"), avg("s2w").as("S2"))
-    val t2 = m.withColumn("tan2", col("S2") / col("C2"))
-      .withColumn("C2w", lit(1.0) / sqrt(lit(1.0) + col("tan2") * col("tan2")))
-      .withColumn("S2w", col("tan2") * col("C2w"))
-      .withColumn("Cw", sqrt(lit(0.5)) * sqrt(lit(1.0) + col("C2w")))
-      .withColumn("Sw", sqrt(lit(0.5)) * signum(col("S2w")) *
-        sqrt(lit(1.0) - col("C2w")))
-    t2.select(col("id"), col("k"),
-      round((col("C") * col("Cw") + col("S") * col("Sw")) *
-        (col("C") * col("Cw") + col("S") * col("Sw")) /
-        (lit(0.5) * (lit(1.0) + col("C2") * col("C2w") + col("S2") * col("S2w"))) +
-        (col("S") * col("Cw") - col("C") * col("Sw")) *
-        (col("S") * col("Cw") - col("C") * col("Sw")) /
-        (lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w"))),
-        6).as("power"))
+      .agg(avg("cw").as("Ch"), avg("sw").as("Sh"),
+        avg("c2w").as("C2"), avg("s2w").as("S2"),
+        lit(0.0).as("C"), lit(0.0).as("S"), lit(1.0).as("YY"))
+    glsPower(m).select("id", "k", "power")
   }
 
   val glsWindowSql: String =
@@ -203,24 +209,16 @@ object Gls {
        |t0 AS (SELECT id, min(t) AS t0 FROM s GROUP BY id),
        |mo AS (
        |  SELECT s.id, k.k,
-       |    avg(cos(2*pi()*${DF}*k.k*(s.t - t0.t0))) AS C,
-       |    avg(sin(2*pi()*${DF}*k.k*(s.t - t0.t0))) AS S,
+       |    avg(cos(2*pi()*${DF}*k.k*(s.t - t0.t0))) AS Ch,
+       |    avg(sin(2*pi()*${DF}*k.k*(s.t - t0.t0))) AS Sh,
        |    avg(cos(2*(2*pi()*${DF}*k.k*(s.t - t0.t0)))) AS C2,
-       |    avg(sin(2*(2*pi()*${DF}*k.k*(s.t - t0.t0)))) AS S2
+       |    avg(sin(2*(2*pi()*${DF}*k.k*(s.t - t0.t0)))) AS S2,
+       |    0.0::DOUBLE AS C, 0.0::DOUBLE AS S, 1.0::DOUBLE AS YY
        |  FROM s JOIN t0 USING (id)
        |  CROSS JOIN generate_series(1, ${NF}) AS k(k)
        |  GROUP BY 1, 2),
-       |t2 AS (SELECT *,
-       |  1.0/sqrt(1.0 + (S2/C2)*(S2/C2)) AS C2w,
-       |  (S2/C2) * (1.0/sqrt(1.0 + (S2/C2)*(S2/C2))) AS S2w FROM mo),
-       |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
-       |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2)
-       |SELECT id, k,
-       |  round((C*Cw + S*Sw)*(C*Cw + S*Sw)
-       |          / (0.5*(1.0 + C2*C2w + S2*S2w))
-       |      + (S*Cw - C*Sw)*(S*Cw - C*Sw)
-       |          / (0.5*(1.0 - C2*C2w - S2*S2w)), 6) AS power
-       |FROM t3""".stripMargin
+       |${powerSql("id, k")}
+       |SELECT id, k, power FROM pg""".stripMargin
 
   /** Sinusoid model fit at f0 — reference spectral.py:169 (GLS.model):
     * least-squares [1, sin, cos] coefficients via the 3×3 normal
@@ -358,27 +356,7 @@ object Gls {
         (sum(col("wt") * col("c2w")) / sum("wt")).as("C2"),
         (sum(col("wt") * col("s2w")) / sum("wt")).as("S2"),
         (sum(col("wt") * col("yc") * col("yc")) / sum("wt")).as("YY"))
-    val tan2 = (col("S2") - lit(2.0) * col("S") * col("C")) /
-      (col("C2") - (col("C") * col("C") - col("S") * col("S")))
-    val t3 = m.withColumn("tan2", tan2)
-      .withColumn("C2w", lit(1.0) / sqrt(lit(1.0) + col("tan2") * col("tan2")))
-      .withColumn("S2w", col("tan2") * col("C2w"))
-      .withColumn("Cw", sqrt(lit(0.5)) * sqrt(lit(1.0) + col("C2w")))
-      .withColumn("Sw", sqrt(lit(0.5)) * signum(col("S2w")) *
-        sqrt(lit(1.0) - col("C2w")))
-      .withColumn("YC", col("Ch") * col("Cw") + col("Sh") * col("Sw"))
-      .withColumn("YS", col("Sh") * col("Cw") - col("Ch") * col("Sw"))
-      .withColumn("CC",
-        lit(0.5) * (lit(1.0) + col("C2") * col("C2w") + col("S2") * col("S2w")) -
-          (col("C") * col("Cw") + col("S") * col("Sw")) *
-          (col("C") * col("Cw") + col("S") * col("Sw")))
-      .withColumn("SS",
-        lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w")) -
-          (col("S") * col("Cw") - col("C") * col("Sw")) *
-          (col("S") * col("Cw") - col("C") * col("Sw")))
-    t3.select(col("id"), col("k"),
-      round((col("YC") * col("YC") / col("CC") +
-        col("YS") * col("YS") / col("SS")) / col("YY"), 6).as("power"))
+    glsPower(m).select("id", "k", "power")
   }
 
   val glsWeightedSql: String = {
@@ -398,9 +376,8 @@ object Gls {
        |  FROM s JOIN st USING (id)
        |  CROSS JOIN generate_series(1, ${NF}) AS k(k)
        |  GROUP BY 1, 2),
-       |$powerSqlBody
-       |SELECT id, k, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |FROM t4""".stripMargin
+       |${powerSql("id, k")}
+       |SELECT id, k, power FROM pg""".stripMargin
   }
 
   /** periods_at_half_max — reference core.py:963: the period interval
@@ -431,10 +408,7 @@ object Gls {
   }
 
   val glsHalfWidthSql: String =
-    s"""$momentsSql,
-       |$powerSqlBody,
-       |pg AS (SELECT id, k, round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |       FROM t4),
+    s"""$periodogramSql,
        |pk AS (SELECT id, k, power,
        |  lag(power,1)  OVER win AS pm, lead(power,1) OVER win AS pp
        |  FROM pg WINDOW win AS (PARTITION BY id ORDER BY k)),

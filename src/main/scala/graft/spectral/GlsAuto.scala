@@ -84,8 +84,8 @@ object GlsAuto {
        |g AS (SELECT *, fmin + k * dfq AS freq FROM gk)""".stripMargin
 
   /** GLS power on the per-series auto grid (fit_mean=true, uniform
-    * weights) — the same Zechmeister–Kürster closed form as
-    * [[Gls.glsPeriodogram]], with freq carried through. */
+    * weights): the per-series moments fed to [[Gls.glsPower]], with
+    * freq carried through as a key. */
   def glsAutogrid(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.series(spark, dir)
     val omega = lit(2.0 * math.Pi) * col("freq") * (col("t") - col("t0"))
@@ -101,29 +101,9 @@ object GlsAuto {
         avg(col("yc") * col("sw")).as("Sh"),
         avg("c2w").as("C2"), avg("s2w").as("S2"),
         avg(col("yc") * col("yc")).as("YY"))
-    val tan2 = (col("S2") - lit(2.0) * col("S") * col("C")) /
-      (col("C2") - (col("C") * col("C") - col("S") * col("S")))
-    val p = m.withColumn("tan2", tan2)
-      .withColumn("C2w", lit(1.0) / sqrt(lit(1.0) + col("tan2") * col("tan2")))
-      .withColumn("S2w", col("tan2") * col("C2w"))
-      .withColumn("Cw", sqrt(lit(0.5)) * sqrt(lit(1.0) + col("C2w")))
-      .withColumn("Sw", sqrt(lit(0.5)) * signum(col("S2w")) *
-        sqrt(lit(1.0) - col("C2w")))
-      .withColumn("YC", col("Ch") * col("Cw") + col("Sh") * col("Sw"))
-      .withColumn("YS", col("Sh") * col("Cw") - col("Ch") * col("Sw"))
-      .withColumn("CC",
-        lit(0.5) * (lit(1.0) + col("C2") * col("C2w") + col("S2") * col("S2w")) -
-          (col("C") * col("Cw") + col("S") * col("Sw")) *
-          (col("C") * col("Cw") + col("S") * col("Sw")))
-      .withColumn("SS",
-        lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w")) -
-          (col("S") * col("Cw") - col("C") * col("Sw")) *
-          (col("S") * col("Cw") - col("C") * col("Sw")))
-    p.select(col("id"), col("k"),
+    Gls.glsPower(m).select(col("id"), col("k"),
       (round(col("freq") * 1e6, 6) + lit(0.0)).as("freq_uhz"),
-      (round((col("YC") * col("YC") / col("CC") +
-        col("YS") * col("YS") / col("SS")) / col("YY"), 6) + lit(0.0))
-        .as("power"))
+      (col("power") + lit(0.0)).as("power"))
   }
 
   private val glsAutogridCte: String =
@@ -139,24 +119,13 @@ object GlsAuto {
        |    avg((s.y - g.ymean) * (s.y - g.ymean)) AS YY
        |  FROM s JOIN g USING (id)
        |  GROUP BY 1, 2),
-       |t1 AS (SELECT id, k, freq, C, S, Ch, Sh, C2, S2, YY,
-       |  (S2 - 2*S*C) / (C2 - (C*C - S*S)) AS tan2 FROM mo),
-       |t2 AS (SELECT *, 1.0/sqrt(1.0 + tan2*tan2) AS C2w,
-       |  tan2 * (1.0/sqrt(1.0 + tan2*tan2)) AS S2w FROM t1),
-       |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
-       |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2),
-       |t4 AS (SELECT id, k, freq, YY,
-       |  Ch*Cw + Sh*Sw AS YC, Sh*Cw - Ch*Sw AS YS,
-       |  0.5*(1.0 + C2*C2w + S2*S2w) - (C*Cw + S*Sw)*(C*Cw + S*Sw) AS CC,
-       |  0.5*(1.0 - C2*C2w - S2*S2w) - (S*Cw - C*Sw)*(S*Cw - C*Sw) AS SS
-       |  FROM t3),
-       |pg AS (SELECT id, k, round(freq * 1e6, 6) + 0.0 AS freq_uhz,
-       |  round((YC*YC/CC + YS*YS/SS)/YY, 6) + 0.0 AS power
-       |  FROM t4)""".stripMargin
+       |${Gls.powerSql("id, k, freq")},
+       |pa AS (SELECT id, k, round(freq * 1e6, 6) + 0.0 AS freq_uhz,
+       |  power + 0.0 AS power FROM pg)""".stripMargin
 
   val glsAutogridSql: String =
     s"""$glsAutogridCte
-       |SELECT id, k, freq_uhz, power FROM pg""".stripMargin
+       |SELECT id, k, freq_uhz, power FROM pa""".stripMargin
 
   /** period_at_highest_peak over the auto grid — reference
     * core.py:952 via the default-grid path the reference's own
@@ -182,7 +151,7 @@ object GlsAuto {
     s"""$glsAutogridCte,
        |pk AS (SELECT id, k, freq_uhz, power,
        |  lag(power,1)  OVER win AS pm, lead(power,1) OVER win AS pp
-       |  FROM pg WINDOW win AS (PARTITION BY id ORDER BY k)),
+       |  FROM pa WINDOW win AS (PARTITION BY id ORDER BY k)),
        |peaks AS (SELECT id, k, freq_uhz, power FROM pk
        |  WHERE pm IS NOT NULL AND pp IS NOT NULL
        |    AND power > pm AND power > pp),

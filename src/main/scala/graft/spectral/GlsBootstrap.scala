@@ -2,7 +2,7 @@ package graft.spectral
 
 import graft.Tables
 import graft.dedup.Dedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,28 +141,8 @@ object GlsBootstrap {
         (col("YCr") - col("ym") * col("C")).as("Ch"),
         (col("YSr") - col("ym") * col("S")).as("Sh"),
         (col("y2") - col("ym") * col("ym")).as("YY"))
-    // Zechmeister–Kürster closed form (mirrors Gls.glsPeriodogram)
-    val tan2 = (col("S2") - lit(2.0) * col("S") * col("C")) /
-      (col("C2") - (col("C") * col("C") - col("S") * col("S")))
-    val pg = m.withColumn("tan2", tan2)
-      .withColumn("C2w", lit(1.0) / sqrt(lit(1.0) + col("tan2") * col("tan2")))
-      .withColumn("S2w", col("tan2") * col("C2w"))
-      .withColumn("Cw", sqrt(lit(0.5)) * sqrt(lit(1.0) + col("C2w")))
-      .withColumn("Sw", sqrt(lit(0.5)) * signum(col("S2w")) *
-        sqrt(lit(1.0) - col("C2w")))
-      .withColumn("YC", col("Ch") * col("Cw") + col("Sh") * col("Sw"))
-      .withColumn("YS", col("Sh") * col("Cw") - col("Ch") * col("Sw"))
-      .withColumn("CC",
-        lit(0.5) * (lit(1.0) + col("C2") * col("C2w") + col("S2") * col("S2w")) -
-          (col("C") * col("Cw") + col("S") * col("Sw")) *
-          (col("C") * col("Cw") + col("S") * col("Sw")))
-      .withColumn("SS",
-        lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w")) -
-          (col("S") * col("Cw") - col("C") * col("Sw")) *
-          (col("S") * col("Cw") - col("C") * col("Sw")))
-      .select(col("id"), col("b"),
-        round((col("YC") * col("YC") / col("CC") +
-          col("YS") * col("YS") / col("SS")) / col("YY"), 6).as("power"))
+    // Zechmeister–Kürster closed form: the shared Gls.glsPower
+    val pg = Gls.glsPower(m).select("id", "b", "power")
     // Single pass over the replicate maxima: the observed peak comes
     // from a window (the subtree above is evaluated ONCE), FAP and the
     // nearest-rank FAL fold into one aggregation.
@@ -233,19 +213,7 @@ object GlsBootstrap {
        |         yk.YSr - yk.ym * base.S AS Sh,
        |         yk.y2 - yk.ym * yk.ym AS YY
        |       FROM yk JOIN base ON base.id = yk.id AND base.k = yk.k),
-       |t1 AS (SELECT id, b, k, C, S, Ch, Sh, C2, S2, YY,
-       |  (S2 - 2*S*C) / (C2 - (C*C - S*S)) AS tan2 FROM mo),
-       |t2 AS (SELECT *, 1.0/sqrt(1.0 + tan2*tan2) AS C2w,
-       |  tan2 * (1.0/sqrt(1.0 + tan2*tan2)) AS S2w FROM t1),
-       |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
-       |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2),
-       |t4 AS (SELECT id, b, YY,
-       |  Ch*Cw + Sh*Sw AS YC, Sh*Cw - Ch*Sw AS YS,
-       |  0.5*(1.0 + C2*C2w + S2*S2w) - (C*Cw + S*Sw)*(C*Cw + S*Sw) AS CC,
-       |  0.5*(1.0 - C2*C2w - S2*S2w) - (S*Cw - C*Sw)*(S*Cw - C*Sw) AS SS
-       |  FROM t3),
-       |pg AS (SELECT id, b,
-       |         round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power FROM t4),
+       |${Gls.powerSql("id, b")},
        |mx AS (SELECT id, b, max(power) AS maxp FROM pg GROUP BY 1, 2),
        |rep AS (SELECT id, b, maxp, best_power,
        |          row_number() OVER (PARTITION BY id ORDER BY maxp, b) AS rk

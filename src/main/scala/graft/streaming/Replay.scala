@@ -586,9 +586,10 @@ object Replay {
     * ZK periodogram over raw moment averages accumulated ACROSS the
     * 4 event-time micro-batches (complete mode). The oracle recomputes
     * the identical moment algebra in DuckDB — same constant
-    * association ((2π·(1/86400))·k)·tc, same algebraic centering, tau
-    * rotation verbatim — with 6 dp power rounding absorbing
-    * FP-summation-order drift (the batch GLS oracle's discipline). */
+    * association ((2π·(1/86400))·k)·tc, same algebraic centering —
+    * and reads it with the batch oracles' closed form, Gls.powerSql,
+    * with 6 dp power rounding absorbing FP-summation-order drift (the
+    * batch GLS oracle's discipline). */
   def streamingGlsReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val rows = eventRows(spark, dir, quantize = false)
@@ -627,20 +628,8 @@ object Replay {
        |  ycw - ym*C AS Ch, ysw - ym*S AS Sh, y2 - ym*ym AS YY,
        |  C, S, C2, S2 FROM m
        |  WHERE n >= 4 AND y2 - ym*ym > 0.0),
-       |t1 AS (SELECT *, (S2 - 2.0*S*C) / (C2 - (C*C - S*S)) AS tan2
-       |  FROM mo),
-       |t2 AS (SELECT *, 1.0/sqrt(1.0 + tan2*tan2) AS C2w,
-       |  tan2 * (1.0/sqrt(1.0 + tan2*tan2)) AS S2w FROM t1),
-       |t3 AS (SELECT *, sqrt(0.5)*sqrt(1.0 + C2w) AS Cw,
-       |  sqrt(0.5)*sign(S2w)*sqrt(1.0 - C2w) AS Sw FROM t2),
-       |t4 AS (SELECT window_start, user_id, k, n, YY,
-       |  Ch*Cw + Sh*Sw AS YC, Sh*Cw - Ch*Sw AS YS,
-       |  0.5*(1.0 + C2*C2w + S2*S2w) - (C*Cw + S*Sw)*(C*Cw + S*Sw) AS CC,
-       |  0.5*(1.0 - C2*C2w - S2*S2w) - (S*Cw - C*Sw)*(S*Cw - C*Sw) AS SS
-       |  FROM t3)
-       |SELECT window_start, user_id, k, n,
-       |  round((YC*YC/CC + YS*YS/SS)/YY, 6) AS power
-       |FROM t4""".stripMargin
+       |${graft.spectral.Gls.powerSql("window_start, user_id, k, n")}
+       |SELECT window_start, user_id, k, n, power FROM pg""".stripMargin
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.spectral.Gls
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -466,29 +467,9 @@ object StreamingOps {
       // means anything, so require n ≥ 4 and positive variance
       // (mirrored in the replay oracle)
       .filter(col("n") >= 4 && col("YY") > 0.0)
-    // the batch query's tau rotation + power, verbatim
-    val withTau = m
-      .withColumn("tan2", (col("S2") - lit(2.0) * col("S") * col("C")) /
-        (col("C2") - (col("C") * col("C") - col("S") * col("S"))))
-      .withColumn("C2w", lit(1.0) / sqrt(lit(1.0) + col("tan2") * col("tan2")))
-      .withColumn("S2w", col("tan2") * col("C2w"))
-      .withColumn("Cw", sqrt(lit(0.5)) * sqrt(lit(1.0) + col("C2w")))
-      .withColumn("Sw", sqrt(lit(0.5)) * signum(col("S2w")) *
-        sqrt(lit(1.0) - col("C2w")))
-    withTau
-      .withColumn("YC", col("Ch") * col("Cw") + col("Sh") * col("Sw"))
-      .withColumn("YS", col("Sh") * col("Cw") - col("Ch") * col("Sw"))
-      .withColumn("CC",
-        lit(0.5) * (lit(1.0) + col("C2") * col("C2w") + col("S2") * col("S2w")) -
-          (col("C") * col("Cw") + col("S") * col("Sw")) *
-          (col("C") * col("Cw") + col("S") * col("Sw")))
-      .withColumn("SS",
-        lit(0.5) * (lit(1.0) - col("C2") * col("C2w") - col("S2") * col("S2w")) -
-          (col("S") * col("Cw") - col("C") * col("Sw")) *
-          (col("S") * col("Cw") - col("C") * col("Sw")))
+    // the batch query's tau rotation + power: the shared Gls.glsPower
+    Gls.glsPower(m)
       .select(col("w.start").as("window_start"), col("user_id"), col("k"),
-        col("n"),
-        round((col("YC") * col("YC") / col("CC") +
-          col("YS") * col("YS") / col("SS")) / col("YY"), 6).as("power"))
+        col("n"), col("power"))
   }
 }

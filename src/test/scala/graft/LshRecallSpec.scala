@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (capped == uncapped candidate sets at this scale). A second,
   * deliberately cap-overflowed corpus (300 identical docs > MaxBucket
   * = 256) pins that the measurement DETECTS cap pruning loudly: the
-  * loss is exactly 1 − C(256,2)/C(300,2), the >1% condition the
-  * VerifyRecall main warns on. */
+  * loss is exactly 1 − C(256,2)/C(300,2), well past a 1% recall
+  * loss. */
 class LshRecallSpec extends AnyFunSuite with GraftSpark {
 
   /** Row-local mirror of the shingle pipeline (the bandKeysOf

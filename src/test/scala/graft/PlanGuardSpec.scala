@@ -55,19 +55,17 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
   }
 
   test("main sources: no driver collect()/first()/head() and no Scala UDFs outside diagnostics") {
-    val root = java.nio.file.Paths.get("/root/repo/src/main/scala/graft")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
     // Replay.scala: the streaming replay harness feeds MemoryStream,
     // which is driver-fed BY DESIGN (the sanctioned exception — see
     // its scaladoc; the registered query output is still distributed)
-    // VerifyRecall.scala: recall-measurement main (driver-side scalar
-    // reads of one-row aggregates only)
     // RangeStress.scala: range-join stress main (same shape — one-row
     // aggregate sinks read as scalars)
     // RangeJoinAuto.scala: plan-choice statistics — two one-row
     // aggregate reads over the smaller join side BEFORE planning (the
     // adaptive-planning pattern); the data path stays distributed
     val allowCollect = Set("Explain.scala", "Replay.scala",
-      "VerifyRecall.scala", "RangeStress.scala", "RangeJoinAuto.scala")
+      "RangeStress.scala", "RangeJoinAuto.scala")
     val bad = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(p => allowCollect(p.getFileName.toString))
@@ -98,5 +96,19 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
         .map(_.getFileName.toString)
     }
     assert(hits == Seq("Session.scala"), s"session builders outside Session: $hits")
+  }
+
+  test("the GLS closed form is written once, in spectral/Gls.scala") {
+    // C2w (cos 2ωτ) names the tau rotation's first step in both the
+    // Spark and the SQL statement; whole words only, so atan2 and the
+    // like never match
+    val word = raw"\bC2w\b".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        word.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toList
+    assert(hits == List("graft/spectral/Gls.scala"),
+      s"GLS closed form restated outside Gls: $hits")
   }
 }

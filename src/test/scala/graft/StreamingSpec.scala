@@ -200,36 +200,48 @@ class StreamingSpec extends AnyFunSuite with GraftSpark {
 
   test("streaming GLS periodogram recovers an injected 6 cycles/day tone " +
     "and matches the closed form exactly") {
+    // GLS power is invariant under time translation, so the stream
+    // twin may phase from the window start instead of min(t): from
+    // minute 0 the two coincide, from minute 17 they do not
+    glsToneCheck(offsetMin = 0, n = 720)
+    glsToneCheck(offsetMin = 17, n = 600)
+  }
+
+  /** One user, one 1-day window starting 2024-01-01: n samples at a
+    * 2-minute cadence from `offsetMin`, carrying a 6 cycles/day
+    * sinusoid with a DC offset (the single-pass algebraic centering
+    * must remove it). The stream's powers must match a direct
+    * Zechmeister–Kürster computation phased from t − min(t). */
+  private def glsToneCheck(offsetMin: Int, n: Int): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    // one user, one 1-day window starting 2024-01-01: a 2-minute
-    // cadence sinusoid at 6 cycles/day with a DC offset (the single-
-    // pass algebraic centering must remove it)
     val t0ms = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val events = (0 until 720).map { i =>
-      val sec = i * 120L
-      Event(i.toLong, new java.sql.Timestamp(t0ms + sec * 1000L), 1L,
-        "lc", 5.0 + 2.0 * math.sin(2.0 * math.Pi * 6.0 * sec / 86400.0))
+    val secs = (0 until n).map(i => offsetMin * 60L + i * 120L)
+    assert(secs.last < 86400L, "every event inside the one day-window")
+    val y = secs.map(s => 5.0 + 2.0 * math.sin(2.0 * math.Pi * 6.0 * s / 86400.0))
+    val events = secs.indices.map { i =>
+      Event(i.toLong, new java.sql.Timestamp(t0ms + secs(i) * 1000L), 1L,
+        "lc", y(i))
     }
     input.addData(events: _*)
     val q = StreamingOps.streamingGls(input.toDS())
       .writeStream.outputMode("update")
-      .format("memory").queryName("gls_out")
+      .format("memory").queryName(s"gls_out_$offsetMin")
       .trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable()
     q.stop()
-    val rows = spark.sql("SELECT k, n, power FROM gls_out ORDER BY k").collect()
+    val rows = spark.sql(s"SELECT k, n, power FROM gls_out_$offsetMin ORDER BY k")
+      .collect()
     assert(rows.length == 24, s"expected the 24-frequency grid, got ${rows.length}")
-    assert(rows.forall(_.getLong(1) == 720L))
+    assert(rows.forall(_.getLong(1) == n.toLong))
     val power = rows.map(r => r.getInt(0) -> r.getDouble(2)).toMap
     assert(power.maxBy(_._2)._1 == 6,
       s"argmax at k=${power.maxBy(_._2)._1}, expected the injected k=6")
     assert(power(6) > 0.99, s"clean sinusoid should have power ~1: ${power(6)}")
     // exact cross-check against a direct Zechmeister-Kurster
-    // computation with the same window-start phase reference
-    val tc = (0 until 720).map(i => (i * 120).toDouble)
-    val y = tc.map(s => 5.0 + 2.0 * math.sin(2.0 * math.Pi * 6.0 * s / 86400.0))
+    // computation phased from the series' own first sample, t − min(t)
+    val tc = secs.map(s => (s - secs.min).toDouble)
     val ym = y.sum / y.length
     val yc = y.map(_ - ym)
     val yy = yc.map(v => v * v).sum / y.length
@@ -255,7 +267,7 @@ class StreamingSpec extends AnyFunSuite with GraftSpark {
         (sM * cwv - cM * swv) * (sM * cwv - cM * swv)
       val expect = (ycp * ycp / cc + ysp * ysp / ss) / yy
       assert(math.abs(power(k) - expect) < 2e-6,
-        s"k=$k: streaming ${power(k)} vs direct $expect")
+        s"offset $offsetMin min, k=$k: streaming ${power(k)} vs direct $expect")
     }
   }
 }
