@@ -11,7 +11,7 @@ object Plans {
   private val Headline = Seq(
     "q1_pricing", "gls_periodogram", "gls_fap", "dedup_minhash_lsh",
     "dedup_clusters", "ann_ivf_topk", "ann_pq_topk", "emb_gram",
-    "emb_abtt", "events_asof_native", "events_window_join",
+    "emb_abtt", "events_asof_purchase", "events_window_join",
     "events_funnel", "text_contamination", "text_unigram_logprob",
     "acf_period_quality", "gp_model_compare", "emb_pc1",
     // round 11: the promoted band-quality chain (three per-band

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** Cost-based formulation dispatch for range (interval) joins.
   *
   * The library carries two physically different interval joins with
-  * disjoint failure modes, measured head-to-head in `graft.RangeStress`
-  * (SCALING.md round 14):
+  * disjoint failure modes, measured head-to-head in SCALING.md
+  * (round 14, and the sf0.1 re-measurement "One formulation per
+  * join", where the sweep never beat a coarse bin on wall time):
   *
   *  - [[RangeJoin.binned]] — equi-join cost class, whole-stage
   *    codegen, and the bin axis doubles as time-axis salting for hot
@@ -29,7 +30,7 @@ import org.apache.spark.sql.functions._
   * occupancy, both single aggregations over the smaller side) feeding
   * a three-way rule. The decision NEVER changes results — all three
   * formulations are row-set-identical (RangeJoinNativeSpec /
-  * RangeStress cross-checks) — so the sampling pass's approximate
+  * RangeJoinSpec cross-checks) — so the sampling pass's approximate
   * quantiles cannot perturb the hash gate, only the plan.
   */
 object RangeJoinAuto {

@@ -32,18 +32,12 @@ import org.apache.spark.sql.types.DoubleType
   * quantity a user can actually reason about), and the cost class is
   * a sort-merge join — shuffle + sort + linear sweep + output.
   *
-  * Workload guidance (measured — `graft.RangeStress`, SCALING.md
-  * round 14): uniform interval widths → [[RangeJoin.binned]] at
-  * bin = width (its best case, 2 rows/interval, codegen'd hash
-  * join); heterogeneous widths → this operator (the binned form's
-  * shuffle amplifies ∝ max-width/bin — 38× measured at a
-  * median-tuned bin over [1 min, 7 d] widths — while this op's
-  * shuffle stays 1× with no bin knob to mis-tune); heterogeneous
-  * widths AND a hot key → binned coarse or salt the key first,
-  * because binning doubles as time-axis salting (a hot key's output
-  * splits across its bins) whereas this op's key-only clustering
-  * serializes a hot key into one task, like any sort-merge join on a
-  * skewed key.
+  * Workload guidance: see [[RangeJoin]]. Re-measured at sf0.1
+  * (SCALING.md "One formulation per join"), this operator's only lead
+  * is shuffle rows (1× against a coarse bin's 1.1–1.8×); on wall time
+  * it never beat a bin at or above the p99 width, and its key-only
+  * clustering serializes a hot key into one task (1.8–2.4× slower
+  * than bin = 1 d), like any sort-merge join on a skewed key.
   */
 object RangeJoinNative {
 

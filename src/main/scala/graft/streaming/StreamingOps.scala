@@ -42,7 +42,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
 
   /** Stream–stream interval join — the streaming twin of the batch
-    * as-of enrichment (plans/AsOf.scala): every purchase joins the
+    * as-of enrichment ([[graft.plans.AsOf.join]]): every purchase joins the
     * clicks of the SAME user in the preceding hour. Both sides are
     * watermarked so Spark bounds the join state (a click older than
     * its watermark + the interval can never match and is evicted) —
@@ -66,8 +66,8 @@ object StreamingOps {
   // latest reference row seen per key (codegen-visible, see SessState)
   private[streaming] case class RefState(pt: Long, value: Double)
 
-  /** Streaming as-of enrichment — the stateful twin of the native
-    * batch as-of join (plans/AsOfNative.scala): every probe event is
+  /** Streaming as-of enrichment — the stateful twin of the batch
+    * as-of join ([[graft.plans.AsOf.join]]): every probe event is
     * enriched with the most recent reference row (purchase) at or
     * before its time for the same key. Keyed state holds ONE row (the
     * latest reference) per user — O(keys) state, no buffering of the

@@ -1,6 +1,5 @@
 package graft.tsa
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,22 +8,12 @@ import org.apache.spark.sql.functions._
   * SeriesOps (one shuffle keyed by series id). */
 object SeriesOps2 {
 
-  private def perSeries[T <: Product: scala.reflect.runtime.universe.TypeTag](
-      spark: SparkSession, dir: String)(
-      f: (Long, Array[Double], Array[Double]) => Iterator[T]) = {
-    import spark.implicits._
-    implicit val enc: org.apache.spark.sql.Encoder[T] =
-      org.apache.spark.sql.Encoders.product[T]
-    Tables.series(spark, dir)
-      .select(col("id").cast("long"), col("t"), col("y"),
-        col("eid").cast("long"))
-      .as[(Long, Double, Double, Long)]
-      .groupByKey(_._1)
-      // structural-equality wrapper — see SeriesOps.SeriesFunc
-      .flatMapGroups(SeriesOps.SeriesFunc(f))
-  }
+  import SeriesOps.perSeries
 
-  /** Uniform resample (6 h grid) shared by the filters below. */
+  /** Uniform resample (6 h grid) shared by the filters below. Not
+    * [[SeriesOps.resampleUniform]]: this one computes (a·b)/c where
+    * that one computes a·(b/c), and the oracles pin each association
+    * (see `resampleCtes`'s `fracFirst`). */
   private def resample(t: Array[Double], y: Array[Double], dt: Double)
       : (Array[Double], Array[Double]) = {
     if (t.length < 2) return (t, y)

@@ -59,13 +59,11 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
     // Replay.scala: the streaming replay harness feeds MemoryStream,
     // which is driver-fed BY DESIGN (the sanctioned exception — see
     // its scaladoc; the registered query output is still distributed)
-    // RangeStress.scala: range-join stress main (same shape — one-row
-    // aggregate sinks read as scalars)
     // RangeJoinAuto.scala: plan-choice statistics — two one-row
     // aggregate reads over the smaller join side BEFORE planning (the
     // adaptive-planning pattern); the data path stays distributed
     val allowCollect = Set("Explain.scala", "Replay.scala",
-      "RangeStress.scala", "RangeJoinAuto.scala")
+      "RangeJoinAuto.scala")
     val bad = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(p => allowCollect(p.getFileName.toString))

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** The dispatcher must (a) route each measured workload shape
-  * (SCALING.md round 14, `graft.RangeStress`) to the formulation that
+  * (SCALING.md round 14) to the formulation that
   * survives it at scale, and (b) never change the row set — the
   * choice is a physical-plan property only. */
 class RangeJoinAutoSpec extends AnyFunSuite with GraftSpark {
