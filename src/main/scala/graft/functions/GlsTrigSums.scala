@@ -34,6 +34,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Sum order within/across partials is partition-dependent — exactly
   * like the built-in `avg` it replaces, and absorbed by the 6 dp
   * output rounding the oracle already relies on.
+  *
+  * The recurrence stays because the bootstrap's DuckDB oracle
+  * (`GlsBootstrap.glsFapSql`) replays it step by step as chained CTE
+  * columns, so both engines see the same trig values. The periodogram
+  * and stream aggregate, [[GlsMoments]], computes every harmonic with
+  * direct cos/sin instead, because their oracles do.
   */
 case class GlsTrigSums(
     tc: Expression,

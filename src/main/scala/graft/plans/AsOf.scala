@@ -41,13 +41,12 @@ object AsOf {
     // ref rows sort BEFORE probe rows at equal t => t_ref <= t matches
     val w = Window.partitionBy(key).orderBy(col(time), col("_is_ref").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val carried = valueCols.foldLeft(
-      unioned.withColumn("_asof_t",
-        last(when(col("_is_ref") === 1, col("_ref_t")), ignoreNulls = true)
-          .over(w))) { (df, c) =>
-      df.withColumn(s"asof_$c",
-        last(when(col("_is_ref") === 1, col(c)), ignoreNulls = true).over(w))
-    }
+    def carry(c: String) =
+      last(when(col("_is_ref") === 1, col(c)), ignoreNulls = true).over(w)
+    // one select of every carried column: Catalyst plans ONE Window
+    // over the sort (a withColumn per column stacks one per column)
+    val carried = unioned.select((col("*") +: carry("_ref_t").as("_asof_t") +:
+      valueCols.map(c => carry(c).as(s"asof_$c"))): _*)
     carried.filter(col("_is_ref") === 0)
       .drop(("_is_ref" +: "_ref_t" +: valueCols): _*)
       .withColumnRenamed("_asof_t", "asof_t")

@@ -1,6 +1,7 @@
 package graft.spectral
 
 import graft.Tables
+import graft.functions.GlsMoments
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,11 +12,14 @@ import org.apache.spark.sql.functions._
   *
   * The reference accelerates ONE series with an FFT-based trig sum
   * (spectral.py:11). At 100 TB the parallel axis is millions of
-  * series × a broadcast frequency grid, so graft computes the exact
-  * trig sums as a single `groupBy(series, freq)` aggregation: partial
-  * aggregation map-side, one shuffle, whole-stage codegen over
-  * sin/cos — embarrassingly parallel and exact (no NFFT gridding
-  * error). Uniform weights w=1/n, fit_mean=true.
+  * series × a frequency grid, so graft computes the exact trig sums
+  * as a single `groupBy(series)` aggregation whose buffer is the
+  * whole moment vector of the grid ([[graft.functions.GlsMoments]]):
+  * partial aggregation map-side, one shuffle of one buffer per series
+  * and partition, no ×grid explode ahead of it — embarrassingly
+  * parallel and exact (no NFFT gridding error). The harmonics are
+  * exploded after the aggregate and read by [[glsPower]], the one
+  * closed form. Uniform weights w=1/n, fit_mean=true.
   *
   * Frequency grid: f_k = k / (30 days), k = 1..200 (periods 30 d down
   * to 3.6 h), matching the reference's uniform grid construction.
@@ -25,7 +29,7 @@ object Gls {
   val NF: Int = 200
 
   /** Per-series t0/mean, centered time tc and demeaned yc. */
-  private[spectral] def centered(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def centered(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.series(spark, dir)
     val stats = s.groupBy("id")
       .agg(min("t").as("t0"),
@@ -49,23 +53,18 @@ object Gls {
        |c AS (SELECT s.id, s.t - st.t0 AS tc, s.y - st.ymean AS yc
        |      FROM s JOIN st USING (id))""".stripMargin
 
-  /** Trig moments per (id, k): all means over the series (w = 1/n). */
-  private def moments(spark: SparkSession, dir: String): DataFrame = {
-    val freqs = spark.range(1, NF + 1).toDF("k")
-    val omega = lit(2.0 * math.Pi * DF) * col("k") * col("tc")
+  /** Trig moments per (id, k): all means over the series (w = 1/n).
+    * One [[GlsMoments]] buffer per series, exploded to the NF
+    * harmonics after the aggregate. */
+  private[graft] def moments(spark: SparkSession, dir: String): DataFrame =
     centered(spark, dir)
-      .crossJoin(broadcast(freqs))
-      .select(col("id"), col("k"),
-        cos(omega).as("cw"), sin(omega).as("sw"),
-        cos(omega * 2.0).as("c2w"), sin(omega * 2.0).as("s2w"),
-        col("yc"))
-      .groupBy("id", "k")
-      .agg(avg("cw").as("C"), avg("sw").as("S"),
-        avg(col("yc") * col("cw")).as("Ch"),
-        avg(col("yc") * col("sw")).as("Sh"),
-        avg("c2w").as("C2"), avg("s2w").as("S2"),
-        avg(col("yc") * col("yc")).as("YY"))
-  }
+      .groupBy("id")
+      .agg(GlsMoments.column(spark, col("tc"), col("yc"),
+        2.0 * math.Pi * DF, NF).as("m"))
+      .select(col("id"), col("m.y2").as("YY"), inline(col("m.h")))
+      .select(col("id"), col("k").cast("long").as("k"), col("C"), col("S"),
+        col("ycos").as("Ch"), col("ysin").as("Sh"), col("C2"), col("S2"),
+        col("YY"))
 
   private val momentsSql: String =
     s"""WITH ${centeredSql},

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GlsMoments
 import graft.spectral.Gls
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -423,50 +424,46 @@ object StreamingOps {
     *
     * The batch query pre-centers y and t in a first pass; a stream
     * gets ONE pass, so this twin restructures the computation to be
-    * fully incremental: the per-(window, user, k) aggregation carries
-    * only RAW moment averages (cos/sin, y, y², y·cos, y·sin — all
-    * associative, so Spark's stateful partial aggregation applies),
-    * and centering happens algebraically after aggregation
-    * (Ch = avg(y·cos) − ȳ·avg(cos), YY = avg(y²) − ȳ²). The phase
-    * reference is the WINDOW START rather than the series' min(t) —
-    * legal because GLS power is invariant under time translation (the
-    * tau rotation absorbs any global phase). State per key is the
-    * fixed-width moment vector, never the samples: O(windows × users
-    * × nf) rows regardless of event volume, the same "sums not
-    * samples" scale posture as the batch gls_fap aggregate. */
+    * fully incremental: the per-(window, user) aggregation carries
+    * only RAW moment averages (cos/sin, y, y², y·cos, y·sin for every
+    * harmonic — all associative, so Spark's stateful partial
+    * aggregation applies), and centering happens algebraically after
+    * aggregation (Ch = avg(y·cos) − ȳ·avg(cos), YY = avg(y²) − ȳ²).
+    * The phase reference is the WINDOW START rather than the series'
+    * min(t) — legal because GLS power is invariant under time
+    * translation (the tau rotation absorbs any global phase).
+    *
+    * State is O(windows × users) rows regardless of event volume and
+    * grid size: one [[graft.functions.GlsMoments]] buffer (the whole
+    * nf-harmonic moment vector) per (window, user), the same "sums
+    * not samples" posture as the batch gls_fap aggregate. The
+    * harmonics are exploded only after the aggregate and the n ≥ 4
+    * filter. A checkpoint written by the earlier per-(window, user, k)
+    * `avg` formulation cannot be resumed by this one: the state
+    * schema differs. */
   def streamingGls(events: Dataset[Event], nf: Int = 24,
       windowDur: String = "1 day"): DataFrame = {
     val df0 = 1.0 / 86400.0 // frequency step: 1 cycle per day (Hz)
-    val ks = array((1 to nf).map(lit): _*)
-    val omega = lit(2.0 * math.Pi * df0) * col("k") * col("tc")
     val m = events
       .withWatermark("ts", "10 minutes")
       .withColumn("w", window(col("ts"), windowDur))
-      .withColumn("k", explode(ks))
-      .withColumn("tc",
-        col("ts").cast("double") - col("w.start").cast("double"))
-      .select(col("w"), col("user_id"), col("k"),
-        cos(omega).as("cw"), sin(omega).as("sw"),
-        cos(omega * 2.0).as("c2w"), sin(omega * 2.0).as("s2w"),
-        col("value").as("y"))
-      .groupBy(col("w"), col("user_id"), col("k"))
-      .agg(count(lit(1)).as("n"),
-        avg("cw").as("C"), avg("sw").as("S"),
-        avg("c2w").as("C2"), avg("s2w").as("S2"),
-        avg("y").as("ym"), avg(col("y") * col("y")).as("y2"),
-        avg(col("y") * col("cw")).as("ycw"),
-        avg(col("y") * col("sw")).as("ysw"))
-      // algebraic centering: identical to pre-centered moments
-      .withColumn("Ch", col("ycw") - col("ym") * col("C"))
-      .withColumn("Sh", col("ysw") - col("ym") * col("S"))
-      .withColumn("YY", col("y2") - col("ym") * col("ym"))
+      .groupBy(col("w"), col("user_id"))
+      .agg(GlsMoments.column(events.sparkSession,
+        col("ts").cast("double") - col("w.start").cast("double"),
+        col("value"), 2.0 * math.Pi * df0, nf).as("m"))
+      .withColumn("YY", col("m.y2") - col("m.ym") * col("m.ym"))
       // degenerate windows have no spectrum: n = 1 gives YY = 0
       // EXACTLY (y2 == ym²) and a zero tan2 denominator (C2 ==
       // C²−S²), which ANSI mode turns into a query-killing divide —
       // a (window,user) needs minimal support before a periodogram
       // means anything, so require n ≥ 4 and positive variance
       // (mirrored in the replay oracle)
-      .filter(col("n") >= 4 && col("YY") > 0.0)
+      .filter(col("m.n") >= 4 && col("YY") > 0.0)
+      .select(col("w"), col("user_id"), col("m.n").as("n"),
+        col("m.ym").as("ym"), col("YY"), inline(col("m.h")))
+      // algebraic centering: identical to pre-centered moments
+      .withColumn("Ch", col("ycos") - col("ym") * col("C"))
+      .withColumn("Sh", col("ysin") - col("ym") * col("S"))
     // the batch query's tau rotation + power: the shared Gls.glsPower
     Gls.glsPower(m)
       .select(col("w.start").as("window_start"), col("user_id"), col("k"),

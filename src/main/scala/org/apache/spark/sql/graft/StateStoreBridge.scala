@@ -1,5 +1,8 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.execution.streaming.state.{StateStore,
   StateStoreProvider, StateStoreProviderId}
 
@@ -11,7 +14,7 @@ import org.apache.spark.sql.execution.streaming.state.{StateStore,
   * which, over a multi-run bench, walks an ever-growing provider map
   * doing local-FS shell forks while holding the provider-map lock
   * (measured: task threads blocked in getStateStoreProvider). */
-object StateStoreBridge {
+object StateStoreBridge extends Logging {
 
   def unloadAll(): Unit = StateStore.unloadAll()
 
@@ -24,7 +27,9 @@ object StateStoreBridge {
     * are read via reflection (same JVM, own classpath); the unload
     * itself goes through Spark's `private[sql]`
     * removeFromLoadedProvidersAndClose, which takes the map lock.
-    * Falls back to unloadAll() if the private shape ever changes. */
+    * Falls back to unloadAll() if the private shape ever changes or
+    * anything else fails — a provider whose `close` throws included —
+    * so the caller's cleanup after the unload still runs. */
   def unloadForCheckpoint(ckRoot: String): Unit = {
     try {
       val f = StateStore.getClass.getDeclaredField("loadedProviders")
@@ -41,7 +46,8 @@ object StateStoreBridge {
       }
       ids.foreach(id => StateStore.removeFromLoadedProvidersAndClose(id))
     } catch {
-      case _: ReflectiveOperationException | _: ClassCastException =>
+      case NonFatal(e) =>
+        logWarning(s"scoped state-store unload failed, unloading all: $e")
         StateStore.unloadAll()
     }
   }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The composed as-of join (union + IGNORE NULLS window carry) must
   * match a direct Scala as-of lookup, let a key predicate reach both
   * parquet scans, and plan as one key exchange and one sort feeding
-  * the window carry. */
+  * one window carry. */
 class AsOfSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
@@ -61,10 +61,9 @@ class AsOfSpec extends AnyFunSuite with GraftSpark {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case other => other
     }
-    // one Window per carried column (asof_t, then each value column),
-    // stacked over the same sorted input
+    // ONE Window carries asof_t and every value column
     val windows = plan.collect { case w: WindowExec => w }
-    assert(windows.nonEmpty, s"window carry missing from:\n$plan")
+    assert(windows.size == 1, s"expected one window carry:\n$plan")
     windows.foreach { w =>
       assert(w.partitionSpec.flatMap(_.references.map(_.name)) == Seq("id"),
         s"window must partition by the key only:\n$plan")
