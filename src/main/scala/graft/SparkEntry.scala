@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every operator from SURVEY.md §2 registers here as a named query
-  * (SparkSession, sfDir) => DataFrame, with a DuckDB-portable oracle
-  * SQL twin used by the driver's correctness gate.
+/** The query contract (SURVEY.md §7). Every operator from SURVEY.md
+  * §2 registers as one [[Query]]: a name, a (SparkSession, sfDir) =>
+  * DataFrame builder and its DuckDB-portable oracle SQL twin, or
+  * rows-only. `queries` and `oracleSql` are views of that one list.
   */
 object SparkEntry {
 
@@ -15,97 +14,57 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     spectral.Gls.glsPeriodogram(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    tsa.TimeSeriesOps.queries ++
-      tsa.TimeSeriesOps2.queries ++
-      tsa.TimeSeriesOps3.queries ++
-      tsa.TimeSeriesOps4.queries ++
-      tsa.SeriesOps.queries ++
-      tsa.SeriesOps2.queries ++
-      tsa.GpOps.queries ++
-      tsa.Vmd.queries ++
-      tsa.Supersmooth.queries ++
-      spectral.Gls.queries ++
-      spectral.Bglst.queries ++
-      spectral.PhaseFold2.queries ++
-      spectral.GlsAuto.queries ++
-      spectral.FSeriesOps.queries ++
-      spectral.PhaseFold.queries ++
-      spectral.Wavelet.queries ++
-      spectral.GlsBootstrap.queries ++
-      relational.EventsOps.queries ++
-      plans.AsOf.queries ++
-      plans.AsOfNative.queries ++
-      plans.RangeJoin.queries ++
-      plans.RangeJoinNative.queries ++
-      plans.RangeJoinAuto.queries ++
-      dedup.Dedup.queries ++
-      dedup.SegDedup.queries ++
-      sim.Similarity.queries ++
-      sim.EmbeddingStats.queries ++
-      sim.Pq.queries ++
-      sim.IvfPq.queries ++
-      sim.SemDedup.queries ++
-      text.TextOps.queries ++
-      text.Pii.queries ++
-      text.Bloom.queries ++
-      text.Pipeline.queries ++
-      text.Quality.queries ++
-      text.Dsir.queries ++
-      text.CorpusOps.queries ++
-      text.Corpus.queries ++
-      multimodal.Multimodal.queries ++
-      multimodal.Phash.queries ++
-      sources.SyntheticData.queries ++
-      sources.NpySource.queries ++
-      sources.SkewGate.queries ++
-      streaming.Replay.queries ++
-      relational.Tpch.queries
+  /** Every registered query; each module is listed once. */
+  lazy val registry: Seq[Query] = Query.registry(
+    tsa.TimeSeriesOps.queries,
+    tsa.TimeSeriesOps2.queries,
+    tsa.TimeSeriesOps3.queries,
+    tsa.TimeSeriesOps4.queries,
+    tsa.SeriesOps.queries,
+    tsa.SeriesOps2.queries,
+    tsa.GpOps.queries,
+    tsa.Vmd.queries,
+    tsa.Supersmooth.queries,
+    spectral.Gls.queries,
+    spectral.Bglst.queries,
+    spectral.PhaseFold2.queries,
+    spectral.GlsAuto.queries,
+    spectral.FSeriesOps.queries,
+    spectral.PhaseFold.queries,
+    spectral.Wavelet.queries,
+    spectral.GlsBootstrap.queries,
+    relational.EventsOps.queries,
+    plans.AsOf.queries,
+    plans.AsOfNative.queries,
+    plans.RangeJoin.queries,
+    plans.RangeJoinNative.queries,
+    plans.RangeJoinAuto.queries,
+    dedup.Dedup.queries,
+    dedup.SegDedup.queries,
+    sim.Similarity.queries,
+    sim.EmbeddingStats.queries,
+    sim.Pq.queries,
+    sim.IvfPq.queries,
+    sim.SemDedup.queries,
+    text.TextOps.queries,
+    text.Pii.queries,
+    text.Bloom.queries,
+    text.Pipeline.queries,
+    text.Quality.queries,
+    text.Dsir.queries,
+    text.CorpusOps.queries,
+    text.Corpus.queries,
+    multimodal.Multimodal.queries,
+    multimodal.Phash.queries,
+    sources.SyntheticData.queries,
+    sources.NpySource.queries,
+    sources.SkewGate.queries,
+    streaming.Replay.queries,
+    relational.Tpch.queries)
 
-  def oracleSql: Map[String, String] =
-    tsa.TimeSeriesOps.oracles ++
-      tsa.TimeSeriesOps2.oracles ++
-      tsa.TimeSeriesOps3.oracles ++
-      tsa.TimeSeriesOps4.oracles ++
-      tsa.SeriesOps.oracles ++
-      tsa.SeriesOps2.oracles ++
-      tsa.GpOps.oracles ++
-      tsa.Vmd.oracles ++
-      tsa.Supersmooth.oracles ++
-      spectral.Gls.oracles ++
-      spectral.Bglst.oracles ++
-      spectral.PhaseFold2.oracles ++
-      spectral.GlsAuto.oracles ++
-      spectral.FSeriesOps.oracles ++
-      spectral.PhaseFold.oracles ++
-      spectral.Wavelet.oracles ++
-      spectral.GlsBootstrap.oracles ++
-      relational.EventsOps.oracles ++
-      plans.AsOf.oracles ++
-      plans.AsOfNative.oracles ++
-      plans.RangeJoin.oracles ++
-      plans.RangeJoinNative.oracles ++
-      plans.RangeJoinAuto.oracles ++
-      dedup.Dedup.oracles ++
-      dedup.SegDedup.oracles ++
-      sim.Similarity.oracles ++
-      sim.EmbeddingStats.oracles ++
-      sim.Pq.oracles ++
-      sim.IvfPq.oracles ++
-      sim.SemDedup.oracles ++
-      text.TextOps.oracles ++
-      text.Pii.oracles ++
-      text.Bloom.oracles ++
-      text.Pipeline.oracles ++
-      text.Quality.oracles ++
-      text.Dsir.oracles ++
-      text.CorpusOps.oracles ++
-      text.Corpus.oracles ++
-      multimodal.Multimodal.oracles ++
-      multimodal.Phash.oracles ++
-      sources.SyntheticData.oracles ++
-      sources.NpySource.oracles ++
-      sources.SkewGate.oracles ++
-      streaming.Replay.oracles ++
-      relational.Tpch.oracles
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

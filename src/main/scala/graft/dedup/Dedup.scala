@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Query, SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,28 +38,12 @@ object Dedup {
       |    FROM documents d)
       |  WHERE tok <> '')""".stripMargin
 
-  // One live persisted cluster table per (session, sfDir) — the
-  // packCounts holder pattern (queryable AND releasable: an
-  // unpersisted entry is rebuilt on next lookup, so any caller that
-  // unpersists the returned Dataset works; releaseClusters is the
-  // explicit hook for harnesses that also want the map entry gone).
-  private val clustersCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  private def sweepStoppedClusters(): Unit = {
-    val it = clustersCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
+  // One persisted cluster table per (session, sfDir): queryable and
+  // releasable, rebuilt on the next lookup once someone unpersists it.
+  private val clusters = SessionMemo.tables()
 
   /** Release the cluster-table cache for `spark` (all sfDirs). */
-  def releaseClusters(spark: SparkSession): Unit = {
-    val it = clustersCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(); it.remove() }
-    }
-  }
+  def releaseClusters(spark: SparkSession): Unit = clusters.release(spark)
 
   /** Word 3-shingles via window leads: (doc_id, shingle). */
   private[graft] def shingles(spark: SparkSession, dir: String): DataFrame = {
@@ -537,24 +521,18 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** The cluster table, materialized once per (session, sfDir) via
-    * the keyed holder above: the CC loop is eager/imperative, so
-    * without the holder every consumer invocation re-ran the whole
-    * propagation loop. Identical rows either way (the holder only
-    * dedups work); storage is released by unpersisting the returned
-    * Dataset or by [[releaseClusters]]. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    sweepStoppedClusters()
-    clustersCache.compute((spark, dir), (_, prev) => {
-      if (prev != null && prev.storageLevel
-          != org.apache.spark.storage.StorageLevel.NONE) prev
-      else {
-        val cl = dedupClustersCompute(spark, dir).persist()
-        cl.count()
-        cl
-      }
-    })
-  }
+  /** The cluster table, materialized once per (session, sfDir) in the
+    * memo above: the CC loop is eager/imperative, so without the memo
+    * every consumer invocation re-ran the whole propagation loop.
+    * Identical rows either way (the memo only dedups work); storage is
+    * released by unpersisting the returned Dataset or by
+    * [[releaseClusters]]. */
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clusters(spark, dir) {
+      val cl = dedupClustersCompute(spark, dir).persist()
+      cl.count()
+      cl
+    }
 
   private def dedupClustersCompute(spark: SparkSession,
       dir: String): DataFrame = {
@@ -851,23 +829,13 @@ object Dedup {
        |FROM agg a JOIN tot t USING (doc_id)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> (dedupExact _),
-    "dedup_minhash_lsh" -> ((s: SparkSession, d: String) => dedupMinhashLsh(s, d)),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_simhash_pairs" -> ((s: SparkSession, d: String) => dedupSimhashPairs(s, d)),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_substring" -> (dedupSubstring _),
-    "dedup_substring_clean" -> (dedupSubstringClean _),
-    "dedup_clusters" -> (dedupClusters _))
-
-  val oracles: Map[String, String] = Map(
-    "dedup_exact" -> dedupExactSql,
-    "dedup_minhash_lsh" -> dedupMinhashLshSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_simhash_pairs" -> dedupSimhashPairsSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_substring" -> dedupSubstringSql,
-    "dedup_substring_clean" -> dedupSubstringCleanSql,
-    "dedup_clusters" -> dedupClustersSql)
+  val queries: Seq[Query] = Seq(
+    Query("dedup_exact", dedupExact, dedupExactSql),
+    Query("dedup_minhash_lsh", dedupMinhashLsh(_, _), dedupMinhashLshSql),
+    Query("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    Query("dedup_simhash_pairs", dedupSimhashPairs(_, _), dedupSimhashPairsSql),
+    Query("dedup_ngram_jaccard", dedupNgramJaccard, dedupNgramJaccardSql),
+    Query("dedup_substring", dedupSubstring, dedupSubstringSql),
+    Query("dedup_substring_clean", dedupSubstringClean, dedupSubstringCleanSql),
+    Query("dedup_clusters", dedupClusters, dedupClustersSql))
 }

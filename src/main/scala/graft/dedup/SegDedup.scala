@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.{h60, h60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -159,11 +159,7 @@ object SegDedup {
        |  coalesce(k.clean_text, '') AS clean_text
        |FROM tot t LEFT JOIN ka k ON k.doc_id = t.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_segments" -> (dedupSegments _),
-    "dedup_segments_clean" -> (dedupSegmentsClean _))
-
-  val oracles: Map[String, String] = Map(
-    "dedup_segments" -> dedupSegmentsSql,
-    "dedup_segments_clean" -> dedupSegmentsCleanSql)
+  val queries: Seq[Query] = Seq(
+    Query("dedup_segments", dedupSegments, dedupSegmentsSql),
+    Query("dedup_segments_clean", dedupSegmentsClean, dedupSegmentsCleanSql))
 }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.{h60, h60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -203,16 +203,11 @@ object Multimodal {
        |FROM m""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_frames" -> (multimodalFrames _),
-    "multimodal_frame_dedup" -> (multimodalFrameDedup _),
-    "multimodal_batch" -> (multimodalBatch _),
-    "multimodal_batch_meta" -> (multimodalBatchMeta _),
-    "multimodal_resize" -> (multimodalResize _))
-
-  val oracles: Map[String, String] = Map(
-    "multimodal_frames" -> multimodalFramesSql,
-    "multimodal_frame_dedup" -> multimodalFrameDedupSql,
-    "multimodal_batch_meta" -> multimodalBatchMetaSql,
-    "multimodal_resize" -> multimodalResizeSql)
+  val queries: Seq[Query] = Seq(
+    Query("multimodal_frames", multimodalFrames, multimodalFramesSql),
+    Query("multimodal_frame_dedup", multimodalFrameDedup,
+      multimodalFrameDedupSql),
+    Query.rowsOnly("multimodal_batch", multimodalBatch),
+    Query("multimodal_batch_meta", multimodalBatchMeta, multimodalBatchMetaSql),
+    Query("multimodal_resize", multimodalResize, multimodalResizeSql))
 }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.h60Sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -223,15 +223,11 @@ object Phash {
        |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_phash" -> (multimodalPhash _),
-    "multimodal_phash_pairs" -> (multimodalPhashPairs(_, _)),
-    "multimodal_phash_wide" -> (multimodalPhashWide _),
-    "multimodal_phash_wide_pairs" -> (multimodalPhashWidePairs _))
-
-  val oracles: Map[String, String] = Map(
-    "multimodal_phash" -> multimodalPhashSql,
-    "multimodal_phash_pairs" -> multimodalPhashPairsSql,
-    "multimodal_phash_wide" -> multimodalPhashWideSql,
-    "multimodal_phash_wide_pairs" -> multimodalPhashWidePairsSql)
+  val queries: Seq[Query] = Seq(
+    Query("multimodal_phash", multimodalPhash, multimodalPhashSql),
+    Query("multimodal_phash_pairs", multimodalPhashPairs(_, _),
+      multimodalPhashPairsSql),
+    Query("multimodal_phash_wide", multimodalPhashWide, multimodalPhashWideSql),
+    Query("multimodal_phash_wide_pairs", multimodalPhashWidePairs,
+      multimodalPhashWidePairsSql))
 }

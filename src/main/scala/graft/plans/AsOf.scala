@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,9 +81,6 @@ object AsOf {
        |FROM s ASOF LEFT JOIN p
        |  ON s.id = p.id AND s.t >= p.pt""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_asof_purchase" -> (eventsAsofPurchase _))
-
-  val oracles: Map[String, String] = Map(
-    "events_asof_purchase" -> eventsAsofPurchaseSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_asof_purchase", eventsAsofPurchase, eventsAsofPurchaseSql))
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{Session, Tables}
+import graft.{Query, Session, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -209,9 +209,6 @@ object AsOfNative {
         col("asof_purchase_value"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_asof_native" -> (eventsAsofNative _))
-
-  val oracles: Map[String, String] = Map(
-    "events_asof_native" -> AsOf.eventsAsofPurchaseSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_asof_native", eventsAsofNative, AsOf.eventsAsofPurchaseSql))
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,9 +92,6 @@ object RangeJoin {
        |  AND s.t >= p.lo AND s.t <= p.lo + $WindowSecs
        |GROUP BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_window_join" -> (eventsWindowJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "events_window_join" -> eventsWindowJoinSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_window_join", eventsWindowJoin, eventsWindowJoinSql))
 }

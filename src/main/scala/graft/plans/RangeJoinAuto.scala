@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -133,9 +133,7 @@ object RangeJoinAuto {
           / 100.0).as("sum_y"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_window_join_auto" -> (eventsWindowJoinAuto _))
-
-  val oracles: Map[String, String] = Map(
-    "events_window_join_auto" -> RangeJoin.eventsWindowJoinSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_window_join_auto", eventsWindowJoinAuto,
+      RangeJoin.eventsWindowJoinSql))
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{Session, Tables}
+import graft.{Query, Session, Tables}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -231,9 +231,7 @@ object RangeJoinNative {
           / 100.0).as("sum_y"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_window_join_native" -> (eventsWindowJoinNative _))
-
-  val oracles: Map[String, String] = Map(
-    "events_window_join_native" -> RangeJoin.eventsWindowJoinSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_window_join_native", eventsWindowJoinNative,
+      RangeJoin.eventsWindowJoinSql))
 }

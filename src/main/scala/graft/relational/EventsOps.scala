@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -175,17 +175,10 @@ object EventsOps {
        |FROM d JOIN f ON f.user_id = d.user_id
        |GROUP BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_json_extract" -> (eventsJsonExtract _),
-    "events_topk_users" -> (eventsTopkUsers _),
-    "events_quantiles" -> (eventsQuantiles _),
-    "events_funnel" -> (eventsFunnel _),
-    "events_retention" -> (eventsRetention _))
-
-  val oracles: Map[String, String] = Map(
-    "events_json_extract" -> eventsJsonExtractSql,
-    "events_topk_users" -> eventsTopkUsersSql,
-    "events_quantiles" -> eventsQuantilesSql,
-    "events_funnel" -> eventsFunnelSql,
-    "events_retention" -> eventsRetentionSql)
+  val queries: Seq[Query] = Seq(
+    Query("events_json_extract", eventsJsonExtract, eventsJsonExtractSql),
+    Query("events_topk_users", eventsTopkUsers, eventsTopkUsersSql),
+    Query("events_quantiles", eventsQuantiles, eventsQuantilesSql),
+    Query("events_funnel", eventsFunnel, eventsFunnelSql),
+    Query("events_retention", eventsRetention, eventsRetentionSql))
 }

@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -173,17 +173,10 @@ object Tpch {
       |  AND l_discount BETWEEN 0.03 AND 0.07
       |  AND l_quantity < 24.0""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing" -> (q1Pricing _),
-    "q3_shipping" -> (q3Shipping _),
-    "q5_region_rev" -> (q5RegionRev _),
-    "q6_selective" -> (q6Selective _),
-    "q10_returns" -> (q10Returns _))
-
-  val oracles: Map[String, String] = Map(
-    "q1_pricing" -> q1PricingSql,
-    "q3_shipping" -> q3ShippingSql,
-    "q5_region_rev" -> q5RegionRevSql,
-    "q6_selective" -> q6SelectiveSql,
-    "q10_returns" -> q10ReturnsSql)
+  val queries: Seq[Query] = Seq(
+    Query("q1_pricing", q1Pricing, q1PricingSql),
+    Query("q3_shipping", q3Shipping, q3ShippingSql),
+    Query("q5_region_rev", q5RegionRev, q5RegionRevSql),
+    Query("q6_selective", q6Selective, q6SelectiveSql),
+    Query("q10_returns", q10Returns, q10ReturnsSql))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -299,15 +299,9 @@ object EmbeddingStats {
        |      / cast(den AS double)) / 1e12)), 6) AS resid
        |FROM agg CROSS JOIN dn""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_dim_stats" -> (embDimStats _),
-    "emb_gram" -> (embGram _),
-    "emb_pc1" -> (embPc1 _),
-    "emb_abtt" -> (embAbtt _))
-
-  val oracles: Map[String, String] = Map(
-    "emb_dim_stats" -> embDimStatsSql,
-    "emb_gram" -> embGramSql,
-    "emb_pc1" -> embPc1Sql,
-    "emb_abtt" -> embAbttSql)
+  val queries: Seq[Query] = Seq(
+    Query("emb_dim_stats", embDimStats, embDimStatsSql),
+    Query("emb_gram", embGram, embGramSql),
+    Query("emb_pc1", embPc1, embPc1Sql),
+    Query("emb_abtt", embAbtt, embAbttSql))
 }

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -103,9 +104,6 @@ object IvfPq {
        |SELECT qid, cid, l2, cast(rank AS BIGINT) AS rank
        |FROM rk WHERE rank <= $TOPK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_ivfpq_topk" -> (annIvfpqTopk _))
-
-  val oracles: Map[String, String] = Map(
-    "ann_ivfpq_topk" -> annIvfpqTopkSql)
+  val queries: Seq[Query] = Seq(
+    Query("ann_ivfpq_topk", annIvfpqTopk, annIvfpqTopkSql))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -217,11 +217,7 @@ object Pq {
        |SELECT qid, cid, l2, cast(rank AS BIGINT) AS rank
        |FROM rk WHERE rank <= $TOPK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pq_codes" -> (embPqCodes _),
-    "ann_pq_topk" -> (annPqTopk _))
-
-  val oracles: Map[String, String] = Map(
-    "emb_pq_codes" -> embPqCodesSql,
-    "ann_pq_topk" -> annPqTopkSql)
+  val queries: Seq[Query] = Seq(
+    Query("emb_pq_codes", embPqCodes, embPqCodesSql),
+    Query("ann_pq_topk", annPqTopk, annPqTopkSql))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -463,11 +463,7 @@ object SemDedup {
     else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_kmeans" -> (embKmeans _),
-    "dedup_semantic" -> (dedupSemantic _))
-
-  val oracles: Map[String, String] = Map(
-    "emb_kmeans" -> embKmeansSql,
-    "dedup_semantic" -> dedupSemanticSql)
+  val queries: Seq[Query] = Seq(
+    Query("emb_kmeans", embKmeans, embKmeansSql),
+    Query("dedup_semantic", dedupSemantic, dedupSemanticSql))
 }

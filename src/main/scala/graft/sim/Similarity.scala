@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -383,16 +383,9 @@ object Similarity {
        |SELECT qid, cid, cosine, cast(rank AS BIGINT) AS rank
        |FROM rk WHERE rank <= $TOPK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_cosine_topk" -> (annCosineTopk _),
-    "ann_lsh_topk" -> (annLshTopk _),
-    "ann_ivf_topk" -> (annIvfTopk _),
-    "dedup_embedding" ->
-      ((s: SparkSession, d: String) => dedupEmbedding(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "ann_cosine_topk" -> annCosineTopkSql,
-    "ann_lsh_topk" -> annLshTopkSql,
-    "ann_ivf_topk" -> annIvfTopkSql,
-    "dedup_embedding" -> dedupEmbeddingSql)
+  val queries: Seq[Query] = Seq(
+    Query("ann_cosine_topk", annCosineTopk, annCosineTopkSql),
+    Query("ann_lsh_topk", annLshTopk, annLshTopkSql),
+    Query("ann_ivf_topk", annIvfTopk, annIvfTopkSql),
+    Query("dedup_embedding", dedupEmbedding(_, _), dedupEmbeddingSql))
 }

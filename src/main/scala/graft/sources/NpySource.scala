@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
@@ -96,9 +97,6 @@ object NpySource {
        |    + 0.0 AS value
        |FROM generate_series(0, ${NTone - 1}) AS g(i)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "npy_source" -> (npySource _))
-
-  val oracles: Map[String, String] = Map(
-    "npy_source" -> npySourceSql)
+  val queries: Seq[Query] = Seq(
+    Query("npy_source", npySource, npySourceSql))
 }

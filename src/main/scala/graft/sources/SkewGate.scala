@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The adversarial skew corpus WIRED INTO the driver gate (round 14,
@@ -72,30 +72,25 @@ object SkewGate {
   // see Quality.textEntropySql / TextOps.textFingerprintSql), so the
   // skew rows wrap them like every other operator.
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "skew_docs" ->
-      ((s, _) => Tables.table(s, skewDir(s), "documents")),
-    "skew_dedup_segments" ->
-      ((s, _) => graft.dedup.SegDedup.dedupSegments(s, skewDir(s))),
-    "skew_dedup_segments_clean" ->
-      ((s, _) => graft.dedup.SegDedup.dedupSegmentsClean(s, skewDir(s))),
-    "skew_dedup_clusters" ->
-      ((s, _) => graft.dedup.Dedup.dedupClusters(s, skewDir(s))),
-    "skew_text_entropy" ->
-      ((s, _) => graft.text.Quality.textEntropy(s, skewDir(s))),
-    "skew_text_fingerprint" ->
-      ((s, _) => graft.text.TextOps.textFingerprint(s, skewDir(s))),
-    "skew_corpus_pipeline" ->
-      ((s, _) => graft.text.Pipeline.corpusPipeline(s, skewDir(s))))
-
-  val oracles: Map[String, String] = Map(
-    "skew_docs" -> s"SELECT * FROM $SkewSrc",
-    "skew_dedup_segments" ->
-      onSkew(graft.dedup.SegDedup.dedupSegmentsSql),
-    "skew_dedup_segments_clean" ->
-      onSkew(graft.dedup.SegDedup.dedupSegmentsCleanSql),
-    "skew_dedup_clusters" -> onSkew(graft.dedup.Dedup.dedupClustersSql),
-    "skew_text_entropy" -> onSkew(graft.text.Quality.textEntropySql),
-    "skew_text_fingerprint" -> onSkew(graft.text.TextOps.textFingerprintSql),
-    "skew_corpus_pipeline" -> onSkew(graft.text.Pipeline.corpusPipelineSql))
+  val queries: Seq[Query] = Seq(
+    Query("skew_docs", (s, _) => Tables.table(s, skewDir(s), "documents"),
+      s"SELECT * FROM $SkewSrc"),
+    Query("skew_dedup_segments",
+      (s, _) => graft.dedup.SegDedup.dedupSegments(s, skewDir(s)),
+      onSkew(graft.dedup.SegDedup.dedupSegmentsSql)),
+    Query("skew_dedup_segments_clean",
+      (s, _) => graft.dedup.SegDedup.dedupSegmentsClean(s, skewDir(s)),
+      onSkew(graft.dedup.SegDedup.dedupSegmentsCleanSql)),
+    Query("skew_dedup_clusters",
+      (s, _) => graft.dedup.Dedup.dedupClusters(s, skewDir(s)),
+      onSkew(graft.dedup.Dedup.dedupClustersSql)),
+    Query("skew_text_entropy",
+      (s, _) => graft.text.Quality.textEntropy(s, skewDir(s)),
+      onSkew(graft.text.Quality.textEntropySql)),
+    Query("skew_text_fingerprint",
+      (s, _) => graft.text.TextOps.textFingerprint(s, skewDir(s)),
+      onSkew(graft.text.TextOps.textFingerprintSql)),
+    Query("skew_corpus_pipeline",
+      (s, _) => graft.text.Pipeline.corpusPipeline(s, skewDir(s)),
+      onSkew(graft.text.Pipeline.corpusPipelineSql)))
 }

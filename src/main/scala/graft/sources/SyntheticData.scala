@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -135,15 +136,9 @@ object SyntheticData {
       |        + 0.3 * sin(pi()/32.0 * (g.n*g.n/512.0 + 32.0))), 6) + 0.0 AS y
       |FROM generate_series(0, 1023) AS g(n)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "syn_bpsk" -> (synBpsk _),
-    "syn_atoms_fm" -> (synAtomsFm _),
-    "syn_two_tones" -> (synTwoTones _),
-    "syn_duffing" -> (synDuffing _))
-
-  val oracles: Map[String, String] = Map(
-    "syn_bpsk" -> synBpskSql,
-    "syn_atoms_fm" -> synAtomsFmSql,
-    "syn_two_tones" -> synTwoTonesSql,
-    "syn_duffing" -> synDuffingSql)
+  val queries: Seq[Query] = Seq(
+    Query("syn_bpsk", synBpsk, synBpskSql),
+    Query("syn_atoms_fm", synAtomsFm, synAtomsFmSql),
+    Query("syn_two_tones", synTwoTones, synTwoTonesSql),
+    Query("syn_duffing", synDuffing, synDuffingSql))
 }

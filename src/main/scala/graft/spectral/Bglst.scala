@@ -1,5 +1,6 @@
 package graft.spectral
 
+import graft.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -231,11 +232,7 @@ object Bglst {
        |  round(th3 * sd, 6) AS trend_per_day
        |FROM bs""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bglst_periodogram" -> (bglstPeriodogram _),
-    "bglst_best" -> (bglstBest _))
-
-  val oracles: Map[String, String] = Map(
-    "bglst_periodogram" -> bglstPeriodogramSql,
-    "bglst_best" -> bglstBestSql)
+  val queries: Seq[Query] = Seq(
+    Query("bglst_periodogram", bglstPeriodogram, bglstPeriodogramSql),
+    Query("bglst_best", bglstBest, bglstBestSql))
 }

@@ -1,5 +1,6 @@
 package graft.spectral
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -305,19 +306,12 @@ object FSeriesOps {
        |SELECT id, k0 AS knee_k, round(a, 3) + 0.0 AS amplitude
        |FROM rk WHERE rn = 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gls_peak_prominence" -> (glsPeakProminence _),
-    "gls_best_prominence" -> (glsBestProminence _),
-    "psd_ifft" -> (psdIfft _),
-    "psd_polyfit" -> (psdPolyfit _),
-    "psd_curvefit" -> (psdCurvefit _),
-    "gls_half_width_prominence" -> (glsHalfWidthProminence _))
-
-  val oracles: Map[String, String] = Map(
-    "gls_peak_prominence" -> glsPeakProminenceSql,
-    "gls_best_prominence" -> glsBestProminenceSql,
-    "psd_ifft" -> psdIfftSql,
-    "psd_polyfit" -> psdPolyfitSql,
-    "psd_curvefit" -> psdCurvefitSql,
-    "gls_half_width_prominence" -> glsHalfWidthProminenceSql)
+  val queries: Seq[Query] = Seq(
+    Query("gls_peak_prominence", glsPeakProminence, glsPeakProminenceSql),
+    Query("gls_best_prominence", glsBestProminence, glsBestProminenceSql),
+    Query("psd_ifft", psdIfft, psdIfftSql),
+    Query("psd_polyfit", psdPolyfit, psdPolyfitSql),
+    Query("psd_curvefit", psdCurvefit, psdCurvefitSql),
+    Query("gls_half_width_prominence", glsHalfWidthProminence,
+      glsHalfWidthProminenceSql))
 }

@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.GlsMoments
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -431,21 +431,12 @@ object Gls {
        |LEFT JOIN lo USING (id)
        |LEFT JOIN hi USING (id)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gls_periodogram" -> (glsPeriodogram _),
-    "gls_best_period" -> (glsBestPeriod _),
-    "gls_window" -> (glsWindow _),
-    "gls_model" -> (glsModel _),
-    "gls_half_width" -> (glsHalfWidth _),
-    "gls_weighted" -> (glsWeighted _),
-    "psd_dft" -> (psdDft _))
-
-  val oracles: Map[String, String] = Map(
-    "gls_periodogram" -> glsPeriodogramSql,
-    "gls_best_period" -> glsBestPeriodSql,
-    "gls_window" -> glsWindowSql,
-    "gls_model" -> glsModelSql,
-    "gls_half_width" -> glsHalfWidthSql,
-    "gls_weighted" -> glsWeightedSql,
-    "psd_dft" -> psdDftSql)
+  val queries: Seq[Query] = Seq(
+    Query("gls_periodogram", glsPeriodogram, glsPeriodogramSql),
+    Query("gls_best_period", glsBestPeriod, glsBestPeriodSql),
+    Query("gls_window", glsWindow, glsWindowSql),
+    Query("gls_model", glsModel, glsModelSql),
+    Query("gls_half_width", glsHalfWidth, glsHalfWidthSql),
+    Query("gls_weighted", glsWeighted, glsWeightedSql),
+    Query("psd_dft", psdDft, psdDftSql))
 }

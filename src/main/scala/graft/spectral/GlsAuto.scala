@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -163,11 +163,7 @@ object GlsAuto {
        |  AND peaks.power = best.best_power
        |GROUP BY peaks.id, best.best_power""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gls_autogrid" -> (glsAutogrid _),
-    "gls_autogrid_best" -> (glsAutogridBest _))
-
-  val oracles: Map[String, String] = Map(
-    "gls_autogrid" -> glsAutogridSql,
-    "gls_autogrid_best" -> glsAutogridBestSql)
+  val queries: Seq[Query] = Seq(
+    Query("gls_autogrid", glsAutogrid, glsAutogridSql),
+    Query("gls_autogrid_best", glsAutogridBest, glsAutogridBestSql))
 }

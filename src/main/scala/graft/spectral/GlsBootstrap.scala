@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -229,9 +229,6 @@ object GlsBootstrap {
        |FROM rep GROUP BY 1, 2""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gls_fap" -> (glsFap _))
-
-  val oracles: Map[String, String] = Map(
-    "gls_fap" -> glsFapSql)
+  val queries: Seq[Query] = Seq(
+    Query("gls_fap", glsFap, glsFapSql))
 }

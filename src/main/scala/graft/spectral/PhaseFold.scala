@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,15 +211,9 @@ object PhaseFold {
        |JOIN crit USING (id)
        |LEFT JOIN sub ON sub.id = th0.id AND sub.j = th0.j""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "string_length" -> (stringLength _),
-    "pdm_theta" -> (pdmTheta _),
-    "pdm_best_period" -> (pdmBestPeriod _),
-    "pdm_subharmonic" -> (pdmSubharmonic _))
-
-  val oracles: Map[String, String] = Map(
-    "string_length" -> stringLengthSql,
-    "pdm_theta" -> pdmThetaSql,
-    "pdm_best_period" -> pdmBestPeriodSql,
-    "pdm_subharmonic" -> pdmSubharmonicSql)
+  val queries: Seq[Query] = Seq(
+    Query("string_length", stringLength, stringLengthSql),
+    Query("pdm_theta", pdmTheta, pdmThetaSql),
+    Query("pdm_best_period", pdmBestPeriod, pdmBestPeriodSql),
+    Query("pdm_subharmonic", pdmSubharmonic, pdmSubharmonicSql))
 }

@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -356,19 +356,11 @@ object PhaseFold2 {
        |FROM g0 JOIN best ON g0.id = best.id AND g0.ln_odds = best.best_odds
        |GROUP BY g0.id, best.best_odds""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "aov_periodogram" -> (aovPeriodogram _),
-    "aov_best" -> (aovBest _),
-    "ce_periodogram" -> (cePeriodogram _),
-    "ce_best" -> (ceBest _),
-    "gl_odds" -> (glOdds _),
-    "gl_best" -> (glBest _))
-
-  val oracles: Map[String, String] = Map(
-    "aov_periodogram" -> aovPeriodogramSql,
-    "aov_best" -> aovBestSql,
-    "ce_periodogram" -> cePeriodogramSql,
-    "ce_best" -> ceBestSql,
-    "gl_odds" -> glOddsSql,
-    "gl_best" -> glBestSql)
+  val queries: Seq[Query] = Seq(
+    Query("aov_periodogram", aovPeriodogram, aovPeriodogramSql),
+    Query("aov_best", aovBest, aovBestSql),
+    Query("ce_periodogram", cePeriodogram, cePeriodogramSql),
+    Query("ce_best", ceBest, ceBestSql),
+    Query("gl_odds", glOdds, glOddsSql),
+    Query("gl_best", glBest, glBestSql))
 }

@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -228,17 +228,10 @@ object Wavelet {
        |  count(*) AS n_cells
        |FROM wp GROUP BY 1, 2, 3""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wavelet_power" -> (waveletPower _),
-    "wavelet_gwps" -> (waveletGwps _),
-    "wavelet_sav" -> (waveletSav _),
-    "wavelet_downsample" -> (waveletDownsample _),
-    "composite_spectrum" -> (compositeSpectrum _))
-
-  val oracles: Map[String, String] = Map(
-    "wavelet_power" -> waveletPowerSql,
-    "wavelet_gwps" -> waveletGwpsSql,
-    "wavelet_sav" -> waveletSavSql,
-    "wavelet_downsample" -> waveletDownsampleSql,
-    "composite_spectrum" -> compositeSpectrumSql)
+  val queries: Seq[Query] = Seq(
+    Query("wavelet_power", waveletPower, waveletPowerSql),
+    Query("wavelet_gwps", waveletGwps, waveletGwpsSql),
+    Query("wavelet_sav", waveletSav, waveletSavSql),
+    Query("wavelet_downsample", waveletDownsample, waveletDownsampleSql),
+    Query("composite_spectrum", compositeSpectrum, compositeSpectrumSql))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Query, SessionMemo, Tables}
 import graft.streaming.StreamingOps.{AsOfOut, Event, SemDrop, SessionOut, Vec}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -43,17 +43,8 @@ object Replay {
   private val seq = new java.util.concurrent.atomic.AtomicLong()
   // previous memory-sink table per op: dropped when the op re-runs so
   // repeated invocations in one session don't accumulate sink tables
-  private val lastSink =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      String]()
-
-  // drop sink entries whose session has stopped (round-13 ADVICE: a
-  // long-lived JVM cycling sessions would otherwise pin every dead
-  // SparkSession — and its last memory-sink table — through this map)
-  private def sweepStopped(): Unit = {
-    val it = lastSink.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
+  private val lastSink = new SessionMemo[String](_ => true,
+    (spark, qn) => spark.catalog.dropTempView(qn))
 
   /** Run `mk` over a MemoryStream fed `batches` (one micro-batch per
     * element, drained in order), sink to a fresh memory table, return
@@ -63,7 +54,6 @@ object Replay {
       inParts: Int = 1)(
       mk: Dataset[T] => DataFrame): DataFrame = {
     implicit val sqlCtx = spark.sqlContext
-    sweepStopped()
     // Round 14 (optimization): a MemoryStream without numPartitions
     // plans ONE input partition per addData block, so a twin's
     // per-arrival kernel (feature hashing, shingling, minhash bands,
@@ -159,8 +149,7 @@ object Replay {
       // also when the unload throws
       finally graft.Scratch.rm(ckFile)
     }
-    Option(lastSink.put((spark, op), qn))
-      .foreach(spark.catalog.dropTempView(_))
+    lastSink.replace(spark, op, qn)
     spark.table(qn)
   }
 
@@ -633,31 +622,26 @@ object Replay {
        |SELECT window_start, user_id, k, n, power FROM pg""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "streaming_sessionize_replay" -> (streamingSessionizeReplay _),
-    "streaming_asof_replay" -> (streamingAsofReplay _),
-    "streaming_semantic_replay" -> (streamingSemanticReplay _),
-    "streaming_windowed_replay" -> (streamingWindowedReplay _),
-    "streaming_neardedup_replay" -> (streamingNeardedupReplay _),
-    "streaming_dedup_replay" -> (streamingDedupReplay _),
-    "streaming_interval_replay" -> (streamingIntervalReplay _),
-    "streaming_contamination_replay" -> (streamingContaminationReplay _),
-    "streaming_lmscore_replay" -> (streamingLmscoreReplay _),
-    "streaming_dsir_replay" -> (streamingDsirReplay _),
-    "streaming_scrub_replay" -> (streamingScrubReplay _),
-    "streaming_gls_replay" -> (streamingGlsReplay _))
-
-  val oracles: Map[String, String] = Map(
-    "streaming_sessionize_replay" -> streamingSessionizeReplaySql,
-    "streaming_asof_replay" -> streamingAsofReplaySql,
-    "streaming_semantic_replay" -> streamingSemanticReplaySql,
-    "streaming_windowed_replay" -> streamingWindowedReplaySql,
-    "streaming_neardedup_replay" -> streamingNeardedupReplaySql,
-    "streaming_dedup_replay" -> streamingDedupReplaySql,
-    "streaming_interval_replay" -> streamingIntervalReplaySql,
-    "streaming_contamination_replay" -> streamingContaminationReplaySql,
-    "streaming_lmscore_replay" -> streamingLmscoreReplaySql,
-    "streaming_dsir_replay" -> streamingDsirReplaySql,
-    "streaming_scrub_replay" -> streamingScrubReplaySql,
-    "streaming_gls_replay" -> streamingGlsReplaySql)
+  val queries: Seq[Query] = Seq(
+    Query("streaming_sessionize_replay", streamingSessionizeReplay,
+      streamingSessionizeReplaySql),
+    Query("streaming_asof_replay", streamingAsofReplay, streamingAsofReplaySql),
+    Query("streaming_semantic_replay", streamingSemanticReplay,
+      streamingSemanticReplaySql),
+    Query("streaming_windowed_replay", streamingWindowedReplay,
+      streamingWindowedReplaySql),
+    Query("streaming_neardedup_replay", streamingNeardedupReplay,
+      streamingNeardedupReplaySql),
+    Query("streaming_dedup_replay", streamingDedupReplay,
+      streamingDedupReplaySql),
+    Query("streaming_interval_replay", streamingIntervalReplay,
+      streamingIntervalReplaySql),
+    Query("streaming_contamination_replay", streamingContaminationReplay,
+      streamingContaminationReplaySql),
+    Query("streaming_lmscore_replay", streamingLmscoreReplay,
+      streamingLmscoreReplaySql),
+    Query("streaming_dsir_replay", streamingDsirReplay, streamingDsirReplaySql),
+    Query("streaming_scrub_replay", streamingScrubReplay,
+      streamingScrubReplaySql),
+    Query("streaming_gls_replay", streamingGlsReplay, streamingGlsReplaySql))
 }

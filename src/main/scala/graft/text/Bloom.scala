@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,9 +117,7 @@ object Bloom {
        |FROM hits GROUP BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_bloom_contamination" -> (corpusBloomContamination _))
-
-  val oracles: Map[String, String] = Map(
-    "corpus_bloom_contamination" -> corpusBloomContaminationSql)
+  val queries: Seq[Query] = Seq(
+    Query("corpus_bloom_contamination", corpusBloomContamination,
+      corpusBloomContaminationSql))
 }

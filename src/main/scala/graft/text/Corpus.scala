@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.Query
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,9 +43,6 @@ object Corpus {
        |  AND q.quality >= 0.5
        |  AND lg.pred_lang = 'en'""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "docs_corpus" -> (docsCorpus _))
-
-  val oracles: Map[String, String] = Map(
-    "docs_corpus" -> docsCorpusSql)
+  val queries: Seq[Query] = Seq(
+    Query("docs_corpus", docsCorpus, docsCorpusSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -171,11 +171,7 @@ object CorpusOps {
       |  round(pow(g.n_docs, 0.7) / t.sw * t.nd / g.n_docs, 6) AS epochs
       |FROM g CROSS JOIN t""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_pack" -> (corpusPack _),
-    "corpus_temperature" -> (corpusTemperature _))
-
-  val oracles: Map[String, String] = Map(
-    "corpus_pack" -> corpusPackSql,
-    "corpus_temperature" -> corpusTemperatureSql)
+  val queries: Seq[Query] = Seq(
+    Query("corpus_pack", corpusPack, corpusPackSql),
+    Query("corpus_temperature", corpusTemperature, corpusTemperatureSql))
 }

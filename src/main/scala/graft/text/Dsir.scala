@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.{h60, h60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -186,11 +186,7 @@ object Dsir {
        |ORDER BY key DESC, doc_id ASC
        |LIMIT $SampleK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dsir_weights" -> (corpusDsirWeights _),
-    "corpus_dsir_sample" -> (corpusDsirSample _))
-
-  val oracles: Map[String, String] = Map(
-    "corpus_dsir_weights" -> corpusDsirWeightsSql,
-    "corpus_dsir_sample" -> corpusDsirSampleSql)
+  val queries: Seq[Query] = Seq(
+    Query("corpus_dsir_weights", corpusDsirWeights, corpusDsirWeightsSql),
+    Query("corpus_dsir_sample", corpusDsirSample, corpusDsirSampleSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,9 +73,6 @@ object Pii {
        |    '$Ipv4', '[IP]', 'g') AS redacted
        |FROM documents""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_pii" -> (textPii _))
-
-  val oracles: Map[String, String] = Map(
-    "text_pii" -> textPiiSql)
+  val queries: Seq[Query] = Seq(
+    Query("text_pii", textPii, textPiiSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -119,24 +119,11 @@ object Pipeline {
   def corpusPipelinePack(spark: SparkSession, dir: String): DataFrame =
     CorpusOps.packFromCounts(packCounts(spark, dir))
 
-  // One live persisted card per (session, sfDir): a bare persist()
-  // inside the query fn held the cached table until session end
-  // (round-12 ADVICE) — the keyed holder makes the cache queryable
-  // and RELEASABLE: a StorageLevel.NONE entry is rebuilt on next
-  // lookup, so any caller that unpersists the returned Dataset frees
-  // it; releaseCounts is the explicit hook for harnesses that also
-  // want the map entry gone.
-  private val countsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  // drop entries whose session has stopped (round-13 ADVICE: a
-  // long-lived JVM cycling sessions would otherwise pin every dead
-  // SparkSession through this map)
-  private def sweepStopped(): Unit = {
-    val it = countsCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
+  // One persisted card per (session, sfDir): a bare persist() inside
+  // the query fn held the cached table until session end; the memo
+  // makes it queryable and releasable, rebuilt on the next lookup once
+  // someone unpersists it.
+  private val counts = SessionMemo.tables()
 
   /** The survivors' (doc_id, ntok) base, materialized ONCE before the
     * prefix sum: exclusivePrefix references its input in both the
@@ -147,35 +134,23 @@ object Pipeline {
     * candidate cache; on a cluster this is the materialized keep
     * card every downstream trainer job reads anyway. */
   private[graft] def packCounts(spark: SparkSession,
-      dir: String): DataFrame = {
-    sweepStopped()
-    countsCache.compute((spark, dir), (_, prev) => {
-      if (prev != null && prev.storageLevel
-          != org.apache.spark.storage.StorageLevel.NONE) prev
-      else {
-        val keep = corpusPipeline(spark, dir)
-          .filter(col("keep")).select("doc_id")
-        val counts = Tables.table(spark, dir, "documents")
-          .join(keep, "doc_id")
-          .select(col("doc_id"),
-            size(org.apache.spark.sql.functions.filter(
-              split(col("text"), " "), t => t =!= lit("")))
-              .cast("long").as("ntok"))
-          .persist()
-        counts.count()
-        counts
-      }
-    })
-  }
+      dir: String): DataFrame =
+    counts(spark, dir) {
+      val keep = corpusPipeline(spark, dir)
+        .filter(col("keep")).select("doc_id")
+      val c = Tables.table(spark, dir, "documents")
+        .join(keep, "doc_id")
+        .select(col("doc_id"),
+          size(org.apache.spark.sql.functions.filter(
+            split(col("text"), " "), t => t =!= lit("")))
+            .cast("long").as("ntok"))
+        .persist()
+      c.count()
+      c
+    }
 
   /** Release the pack card cache for `spark` (all sfDirs). */
-  def releaseCounts(spark: SparkSession): Unit = {
-    val it = countsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(); it.remove() }
-    }
-  }
+  def releaseCounts(spark: SparkSession): Unit = counts.release(spark)
 
   val corpusPipelinePackSql: String =
     s"""WITH pipe AS (
@@ -188,11 +163,7 @@ object Pipeline {
        |)
        |SELECT * FROM packed""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_pipeline" -> (corpusPipeline _),
-    "corpus_pipeline_pack" -> (corpusPipelinePack _))
-
-  val oracles: Map[String, String] = Map(
-    "corpus_pipeline" -> corpusPipelineSql,
-    "corpus_pipeline_pack" -> corpusPipelinePackSql)
+  val queries: Seq[Query] = Seq(
+    Query("corpus_pipeline", corpusPipeline, corpusPipelineSql),
+    Query("corpus_pipeline_pack", corpusPipelinePack, corpusPipelinePackSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.{h60, h60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -251,15 +251,9 @@ object Quality {
        |WHERE bucket <> 'tail'
        |   OR ${h60Sql("cast(doc_id AS VARCHAR)")} % 100 < 10""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_entropy" -> (textEntropy _),
-    "corpus_ccnet_buckets" -> (corpusCcnetBuckets _),
-    "corpus_ccnet_sample" -> (corpusCcnetSample _),
-    "corpus_quality_filter" -> (corpusQualityFilter _))
-
-  val oracles: Map[String, String] = Map(
-    "text_entropy" -> textEntropySql,
-    "corpus_ccnet_buckets" -> corpusCcnetBucketsSql,
-    "corpus_ccnet_sample" -> corpusCcnetSampleSql,
-    "corpus_quality_filter" -> corpusQualityFilterSql)
+  val queries: Seq[Query] = Seq(
+    Query("text_entropy", textEntropy, textEntropySql),
+    Query("corpus_ccnet_buckets", corpusCcnetBuckets, corpusCcnetBucketsSql),
+    Query("corpus_ccnet_sample", corpusCcnetSample, corpusCcnetSampleSql),
+    Query("corpus_quality_filter", corpusQualityFilter, corpusQualityFilterSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup.{h60, h60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -568,29 +568,16 @@ object TextOps {
        |WHERE ${h60Sql("cast(doc_id AS VARCHAR)")} % 100 <
        |  CASE WHEN pred_lang = 'en' THEN 10 ELSE 50 END""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_token_count" -> (textTokenCount _),
-    "text_langid" -> (textLangid _),
-    "text_quality" -> (textQuality _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_tfidf_top" -> (textTfidfTop _),
-    "text_unigram_logprob" -> (textUnigramLogprob _),
-    "text_contamination" -> (textContamination _),
-    "text_repetition" -> (textRepetition _),
-    "corpus_mix_stats" -> (corpusMixStats _),
-    "corpus_sample" -> (corpusSample _),
-    "multimodal_extract" -> (multimodalExtract _))
-
-  val oracles: Map[String, String] = Map(
-    "text_token_count" -> textTokenCountSql,
-    "text_langid" -> textLangidSql,
-    "text_quality" -> textQualitySql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_tfidf_top" -> textTfidfTopSql,
-    "text_unigram_logprob" -> textUnigramLogprobSql,
-    "text_contamination" -> textContaminationSql,
-    "text_repetition" -> textRepetitionSql,
-    "corpus_mix_stats" -> corpusMixStatsSql,
-    "corpus_sample" -> corpusSampleSql,
-    "multimodal_extract" -> multimodalExtractSql)
+  val queries: Seq[Query] = Seq(
+    Query("text_token_count", textTokenCount, textTokenCountSql),
+    Query("text_langid", textLangid, textLangidSql),
+    Query("text_quality", textQuality, textQualitySql),
+    Query("text_fingerprint", textFingerprint, textFingerprintSql),
+    Query("text_tfidf_top", textTfidfTop, textTfidfTopSql),
+    Query("text_unigram_logprob", textUnigramLogprob, textUnigramLogprobSql),
+    Query("text_contamination", textContamination, textContaminationSql),
+    Query("text_repetition", textRepetition, textRepetitionSql),
+    Query("corpus_mix_stats", corpusMixStats, corpusMixStatsSql),
+    Query("corpus_sample", corpusSample, corpusSampleSql),
+    Query("multimodal_extract", multimodalExtract, multimodalExtractSql))
 }

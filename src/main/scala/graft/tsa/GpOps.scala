@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -811,20 +811,6 @@ object GpOps {
       |  cast(sum(r * r) AS BIGINT) AS sse_u
       |FROM p GROUP BY id, map_period""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gp_brownian_map" -> (gpBrownianMap _),
-    "gp_harmonic_map" -> (gpHarmonicMap _),
-    "gp_psd" -> (gpPsd _),
-    "gp_predict" -> (gpPredict _),
-    "gp_loocv" -> (gpLoocv _),
-    "gp_posterior" -> (gpPosterior _),
-    "gp_posterior_interval" -> (gpPosteriorInterval _),
-    "gp_model_compare" -> (gpModelCompare _),
-    "gp_predict_fit" -> (gpPredictFit _),
-    "hht_spectrogram" -> (hhtSpectrogram _),
-    "ts_envelope_coeffs" -> (tsEnvelopeCoeffs _),
-    "ts_envelope" -> (tsEnvelope _))
-
   /** ts_envelope_coeffs, hash-gated (round 9): the envelope kernel is
     * window-expressible extrema detection + edge padding (pure
     * per-row arithmetic) feeding the SAME Thomas recurrences as
@@ -1081,17 +1067,17 @@ object GpOps {
        |FROM mu, LATERAL (SELECT unnest(range(n)) AS q) q""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "gp_brownian_map" -> gpBrownianMapSql,
-    "gp_harmonic_map" -> gpHarmonicMapSql,
-    "gp_loocv" -> gpLoocvSql,
-    "gp_predict" -> gpPredictSql,
-    "gp_psd" -> gpPsdSql,
-    "ts_envelope_coeffs" -> tsEnvelopeCoeffsSql,
-    "gp_posterior" -> gpPosteriorSql,
-    "gp_posterior_interval" -> gpPosteriorIntervalSql,
-    "gp_model_compare" -> gpModelCompareSql,
-    "gp_predict_fit" -> gpPredictFitSql,
-    "hht_spectrogram" -> hhtSpectrogramSql,
-    "ts_envelope" -> tsEnvelopeSql)
+  val queries: Seq[Query] = Seq(
+    Query("gp_brownian_map", gpBrownianMap, gpBrownianMapSql),
+    Query("gp_harmonic_map", gpHarmonicMap, gpHarmonicMapSql),
+    Query("gp_psd", gpPsd, gpPsdSql),
+    Query("gp_predict", gpPredict, gpPredictSql),
+    Query("gp_loocv", gpLoocv, gpLoocvSql),
+    Query("gp_posterior", gpPosterior, gpPosteriorSql),
+    Query("gp_posterior_interval", gpPosteriorInterval, gpPosteriorIntervalSql),
+    Query("gp_model_compare", gpModelCompare, gpModelCompareSql),
+    Query("gp_predict_fit", gpPredictFit, gpPredictFitSql),
+    Query("hht_spectrogram", hhtSpectrogram, hhtSpectrogramSql),
+    Query("ts_envelope_coeffs", tsEnvelopeCoeffs, tsEnvelopeCoeffsSql),
+    Query("ts_envelope", tsEnvelope, tsEnvelopeSql))
 }

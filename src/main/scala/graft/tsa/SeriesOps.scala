@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -453,17 +453,6 @@ object SeriesOps {
 
   val hhtNhtSql: String =
     htGradientSql("hht_nht_norm", Seq("id", "mode"), "amp")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_butterworth" -> (tsButterworth _),
-    "emd_imfs" -> (emdImfs _),
-    "hht_norm" -> (hhtNorm _),
-    "hht_inst" -> (hhtInst _),
-    "hht_analytic" -> (hhtAnalytic _),
-    "hht_ht" -> (hhtHt _),
-    "hht_nht_norm" -> (hhtNhtNorm _),
-    "hht_nht" -> (hhtNht _),
-    "gp_period_map" -> (gpPeriodMap _))
 
   /** ts_butterworth, hash-gated (round 9): scipy's sosfiltfilt shape
     * replayed bit-exactly — shared resample CTEs (SeriesOps2), the
@@ -1121,14 +1110,14 @@ object SeriesOps {
         "- __D__ * __D__ * il2)")
   }
 
-  val oracles: Map[String, String] = Map(
-    "gp_period_map" -> gpPeriodMapSql,
-    "hht_inst" -> hhtInstSql,
-    "hht_norm" -> hhtNormSql,
-    "hht_nht_norm" -> hhtNhtNormSql,
-    "hht_ht" -> hhtHtSql,
-    "hht_nht" -> hhtNhtSql,
-    "ts_butterworth" -> tsButterworthSql,
-    "hht_analytic" -> hhtAnalyticSql,
-    "emd_imfs" -> emdImfsSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_butterworth", tsButterworth, tsButterworthSql),
+    Query("emd_imfs", emdImfs, emdImfsSql),
+    Query("hht_norm", hhtNorm, hhtNormSql),
+    Query("hht_inst", hhtInst, hhtInstSql),
+    Query("hht_analytic", hhtAnalytic, hhtAnalyticSql),
+    Query("hht_ht", hhtHt, hhtHtSql),
+    Query("hht_nht_norm", hhtNhtNorm, hhtNhtNormSql),
+    Query("hht_nht", hhtNht, hhtNhtSql),
+    Query("gp_period_map", gpPeriodMap, gpPeriodMapSql))
 }

@@ -1,5 +1,6 @@
 package graft.tsa
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1074,22 +1075,6 @@ object SeriesOps2 {
       |  max(af) AS fm_max
       |FROM m GROUP BY id, mode""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lmd_modes" -> (lmdModes _),
-    "lmd_energy" -> (lmdEnergy _),
-    "ceemdan" -> (ceemdan _),
-    "ceemdan_dump" -> (ceemdanDump _),
-    "ceemdan_post" -> (ceemdanPost _),
-    "ceemdan_orthogonality" -> (ceemdanOrthogonality _),
-    "ceemdan_c_orthogonality" -> (ceemdanCOrthogonality _),
-    "acf_period_quality" -> (acfPeriodQuality _),
-    "acf_band_filter" -> (acfBandFilter _),
-    "acf_band_quality" -> (acfBandQuality _),
-    "gaussian_prior" -> (gaussianPrior _),
-    "ts_dwt_coeffs" -> (tsDwtCoeffs _),
-    "ts_denoise_coeffs" -> (tsDenoiseCoeffs _),
-    "ts_denoise" -> (tsDenoise _))
-
   /** ts_dwt_coeffs, hash-gated (round 9): the periodized db4 pyramid
     * is a FIXED-DEPTH level recursion — a recursive CTE carrying one
     * list-valued row per series per level replays it bit-exactly
@@ -1465,19 +1450,21 @@ object SeriesOps2 {
        |WHERE e.accepted""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "lmd_energy" -> lmdEnergySql,
-    "lmd_modes" -> lmdModesSql,
-    "ceemdan" -> ceemdanSql,
-    "ceemdan_dump" -> CeemdanSql.ceemdanDumpSql,
-    "ceemdan_post" -> ceemdanPostSql,
-    "ts_dwt_coeffs" -> tsDwtCoeffsSql,
-    "ts_denoise" -> tsDenoiseSql,
-    "ceemdan_orthogonality" -> orthogonalitySql("ceemdan"),
-    "ceemdan_c_orthogonality" -> orthogonalitySql("ceemdan_post"),
-    "gaussian_prior" -> gaussianPriorSql,
-    "acf_period_quality" -> acfPeriodQualitySql,
-    "acf_band_filter" -> acfBandFilterSql,
-    "acf_band_quality" -> acfBandQualitySql,
-    "ts_denoise_coeffs" -> tsDenoiseCoeffsSql)
+  val queries: Seq[Query] = Seq(
+    Query("lmd_modes", lmdModes, lmdModesSql),
+    Query("lmd_energy", lmdEnergy, lmdEnergySql),
+    Query("ceemdan", ceemdan, ceemdanSql),
+    Query("ceemdan_dump", ceemdanDump, CeemdanSql.ceemdanDumpSql),
+    Query("ceemdan_post", ceemdanPost, ceemdanPostSql),
+    Query("ceemdan_orthogonality", ceemdanOrthogonality,
+      orthogonalitySql("ceemdan")),
+    Query("ceemdan_c_orthogonality", ceemdanCOrthogonality,
+      orthogonalitySql("ceemdan_post")),
+    Query("acf_period_quality", acfPeriodQuality, acfPeriodQualitySql),
+    Query("acf_band_filter", acfBandFilter, acfBandFilterSql),
+    Query("acf_band_quality", acfBandQuality, acfBandQualitySql),
+    Query("gaussian_prior", gaussianPrior, gaussianPriorSql),
+    Query("ts_dwt_coeffs", tsDwtCoeffs, tsDwtCoeffsSql),
+    Query("ts_denoise_coeffs", tsDenoiseCoeffs, tsDenoiseCoeffsSql),
+    Query("ts_denoise", tsDenoise, tsDenoiseSql))
 }

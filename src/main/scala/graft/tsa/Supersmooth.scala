@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -138,9 +138,6 @@ object Supersmooth {
        |FROM sc""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_supersmooth" -> (tsSupersmooth _))
-
-  val oracles: Map[String, String] = Map(
-    "ts_supersmooth" -> tsSupersmoothSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_supersmooth", tsSupersmooth, tsSupersmoothSql))
 }

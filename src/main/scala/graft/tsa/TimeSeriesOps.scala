@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -655,41 +655,22 @@ object TimeSeriesOps {
        |  round(sum(y),4) AS sum_y
        |FROM sess GROUP BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_downsample" -> (tsDownsample _),
-    "ts_fold" -> (tsFold _),
-    "ts_split_gaps" -> (tsSplitGaps _),
-    "ts_smooth_boxcar" -> (tsSmoothBoxcar _),
-    "ts_smooth_triangle" -> (tsSmoothTriangle _),
-    "ts_derivative" -> (tsDerivative _),
-    "ts_teo" -> (tsTeo _),
-    "ts_find_peaks" -> (tsFindPeaks _),
-    "ts_zero_crossings" -> (tsZeroCrossings _),
-    "ts_estimate_noise" -> (tsEstimateNoise _),
-    "ts_acf" -> (tsAcf _),
-    "acf_best_period" -> (acfBestPeriod _),
-    "ts_stats" -> (tsStats _),
-    "ts_polyfit" -> (tsPolyfit _),
-    "ts_corr" -> (tsCorr _),
-    "ts_fill_gaps" -> (tsFillGaps _),
-    "events_sessionize" -> (eventsSessionize _))
-
-  val oracles: Map[String, String] = Map(
-    "ts_downsample" -> tsDownsampleSql,
-    "ts_fold" -> tsFoldSql,
-    "ts_split_gaps" -> tsSplitGapsSql,
-    "ts_smooth_boxcar" -> tsSmoothBoxcarSql,
-    "ts_smooth_triangle" -> tsSmoothTriangleSql,
-    "ts_derivative" -> tsDerivativeSql,
-    "ts_teo" -> tsTeoSql,
-    "ts_find_peaks" -> tsFindPeaksSql,
-    "ts_zero_crossings" -> tsZeroCrossingsSql,
-    "ts_estimate_noise" -> tsEstimateNoiseSql,
-    "ts_acf" -> tsAcfSql,
-    "acf_best_period" -> acfBestPeriodSql,
-    "ts_stats" -> tsStatsSql,
-    "ts_polyfit" -> tsPolyfitSql,
-    "ts_corr" -> tsCorrSql,
-    "ts_fill_gaps" -> tsFillGapsSql,
-    "events_sessionize" -> eventsSessionizeSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_downsample", tsDownsample, tsDownsampleSql),
+    Query("ts_fold", tsFold, tsFoldSql),
+    Query("ts_split_gaps", tsSplitGaps, tsSplitGapsSql),
+    Query("ts_smooth_boxcar", tsSmoothBoxcar, tsSmoothBoxcarSql),
+    Query("ts_smooth_triangle", tsSmoothTriangle, tsSmoothTriangleSql),
+    Query("ts_derivative", tsDerivative, tsDerivativeSql),
+    Query("ts_teo", tsTeo, tsTeoSql),
+    Query("ts_find_peaks", tsFindPeaks, tsFindPeaksSql),
+    Query("ts_zero_crossings", tsZeroCrossings, tsZeroCrossingsSql),
+    Query("ts_estimate_noise", tsEstimateNoise, tsEstimateNoiseSql),
+    Query("ts_acf", tsAcf, tsAcfSql),
+    Query("acf_best_period", acfBestPeriod, acfBestPeriodSql),
+    Query("ts_stats", tsStats, tsStatsSql),
+    Query("ts_polyfit", tsPolyfit, tsPolyfitSql),
+    Query("ts_corr", tsCorr, tsCorrSql),
+    Query("ts_fill_gaps", tsFillGaps, tsFillGapsSql),
+    Query("events_sessionize", eventsSessionize, eventsSessionizeSql))
 }

@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -224,19 +224,11 @@ object TimeSeriesOps2 {
       |        / count(*) / 100.0, 6) AS mean_y
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_interpolate_na" -> (tsInterpolateNa _),
-    "psd_downsample" -> (psdDownsample _),
-    "ts_teo_instfreq" -> (tsTeoInstfreq _),
-    "ts_transform" -> (tsTransform _),
-    "ts_roll" -> (tsRoll _),
-    "ts_stats_by_type" -> (tsStatsByType _))
-
-  val oracles: Map[String, String] = Map(
-    "ts_interpolate_na" -> tsInterpolateNaSql,
-    "psd_downsample" -> psdDownsampleSql,
-    "ts_teo_instfreq" -> tsTeoInstfreqSql,
-    "ts_transform" -> tsTransformSql,
-    "ts_roll" -> tsRollSql,
-    "ts_stats_by_type" -> tsStatsByTypeSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_interpolate_na", tsInterpolateNa, tsInterpolateNaSql),
+    Query("psd_downsample", psdDownsample, psdDownsampleSql),
+    Query("ts_teo_instfreq", tsTeoInstfreq, tsTeoInstfreqSql),
+    Query("ts_transform", tsTransform, tsTransformSql),
+    Query("ts_roll", tsRoll, tsRollSql),
+    Query("ts_stats_by_type", tsStatsByType, tsStatsByTypeSql))
 }

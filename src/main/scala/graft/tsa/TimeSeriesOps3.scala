@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -264,17 +264,10 @@ object TimeSeriesOps3 {
        |FROM rk WHERE rn = 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_smooth_gaussian" -> (tsSmoothGaussian _),
-    "ts_convolve" -> ((s: SparkSession, d: String) => tsConvolve(s, d)),
-    "ts_find_dips" -> (tsFindDips _),
-    "ts_acf_unbiased" -> (tsAcfUnbiased _),
-    "ts_curvefit" -> (tsCurvefit _))
-
-  val oracles: Map[String, String] = Map(
-    "ts_smooth_gaussian" -> tsSmoothGaussianSql,
-    "ts_convolve" -> tsConvolveSql,
-    "ts_find_dips" -> tsFindDipsSql,
-    "ts_acf_unbiased" -> tsAcfUnbiasedSql,
-    "ts_curvefit" -> tsCurvefitSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_smooth_gaussian", tsSmoothGaussian, tsSmoothGaussianSql),
+    Query("ts_convolve", tsConvolve(_, _), tsConvolveSql),
+    Query("ts_find_dips", tsFindDips, tsFindDipsSql),
+    Query("ts_acf_unbiased", tsAcfUnbiased, tsAcfUnbiasedSql),
+    Query("ts_curvefit", tsCurvefit, tsCurvefitSql))
 }

@@ -1,6 +1,6 @@
 package graft.tsa
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -400,16 +400,6 @@ object TimeSeriesOps4 {
        |  round(cast(mx AS double) / 1000000.0, 6) AS y_max
        |FROM b GROUP BY 1, 2, mn, mx""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_interp" -> (tsInterp _),
-    "ts_spline_coeffs" -> (tsSplineCoeffs _),
-    "ts_interp_spline" -> (tsInterpSpline _),
-    "ts_join" -> (tsJoin _),
-    "ts_pad" -> (tsPad _),
-    "ts_dropna" -> (tsDropna _),
-    "ts_hist" -> (tsHist _),
-    "ts_drop" -> (tsDrop _))
-
   /** The Thomas-algorithm recurrences (SeriesMath.splineCoeffs) as a
     * DuckDB recursive-CTE chain over a knots relation
     * `kn(<keys>, i, n, x, y)` (i = 0-based knot index, n = knots per
@@ -488,13 +478,13 @@ object TimeSeriesOps4 {
        |JOIN cc c1 ON c1.id = sg.id AND c1.i = sg.i + 1
        |WHERE sg.i <= sg.n - 2""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "ts_interp" -> tsInterpSql,
-    "ts_interp_spline" -> tsInterpSplineSql,
-    "ts_spline_coeffs" -> tsSplineCoeffsSql,
-    "ts_join" -> tsJoinSql,
-    "ts_pad" -> tsPadSql,
-    "ts_dropna" -> tsDropnaSql,
-    "ts_hist" -> tsHistSql,
-    "ts_drop" -> tsDropSql)
+  val queries: Seq[Query] = Seq(
+    Query("ts_interp", tsInterp, tsInterpSql),
+    Query("ts_spline_coeffs", tsSplineCoeffs, tsSplineCoeffsSql),
+    Query("ts_interp_spline", tsInterpSpline, tsInterpSplineSql),
+    Query("ts_join", tsJoin, tsJoinSql),
+    Query("ts_pad", tsPad, tsPadSql),
+    Query("ts_dropna", tsDropna, tsDropnaSql),
+    Query("ts_hist", tsHist, tsHistSql),
+    Query("ts_drop", tsDrop, tsDropSql))
 }

@@ -1,5 +1,6 @@
 package graft.tsa
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Variational Mode Decomposition — BEYOND the reference's shipped
@@ -283,11 +284,7 @@ object Vmd {
        |FROM res2, LATERAL (SELECT unnest(range(n)) AS q) q""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "vmd_modes" -> (vmdModes _),
-    "vmd_energy" -> (vmdEnergy _))
-
-  val oracles: Map[String, String] = Map(
-    "vmd_modes" -> vmdModesSql,
-    "vmd_energy" -> vmdEnergySql)
+  val queries: Seq[Query] = Seq(
+    Query("vmd_modes", vmdModes, vmdModesSql),
+    Query("vmd_energy", vmdEnergy, vmdEnergySql))
 }

@@ -16,39 +16,46 @@ import org.apache.spark.sql.execution.streaming.state.{StateStore,
   * (measured: task threads blocked in getStateStoreProvider). */
 object StateStoreBridge extends Logging {
 
-  def unloadAll(): Unit = StateStore.unloadAll()
+  /** The loaded providers whose checkpoint root contains `ckRoot`. The
+    * loaded-provider map is object-private, so it is read via
+    * reflection (same JVM, own classpath). */
+  def loadedUnder(ckRoot: String): List[StateStoreProviderId] = {
+    val f = StateStore.getClass.getDeclaredField("loadedProviders")
+    f.setAccessible(true)
+    val map = f.get(StateStore).asInstanceOf[
+      scala.collection.mutable.HashMap[StateStoreProviderId,
+        StateStoreProvider]]
+    // contains, not startsWith: the provider's root is the resolved
+    // "<scheme>:<ckRoot>/state" path, and ckRoot (pid + per-run qn)
+    // is globally unique, so a substring match is exact
+    map.synchronized {
+      map.keys.filter(
+        _.storeId.checkpointRootLocation.contains(ckRoot)).toList
+    }
+  }
 
-  /** Unload only the providers rooted at `ckRoot` (round 15, r14
-    * VERDICT item 9 / ADVICE item 2): unloadAll() is only safe while
-    * replays are strictly sequential and no other streaming query is
-    * live in the JVM — a concurrent stateful query would have its
-    * providers closed mid-batch and be forced into checkpoint
-    * reloads. The loaded-provider map is object-private, so the ids
-    * are read via reflection (same JVM, own classpath); the unload
-    * itself goes through Spark's `private[sql]`
-    * removeFromLoadedProvidersAndClose, which takes the map lock.
-    * Falls back to unloadAll() if the private shape ever changes or
-    * anything else fails — a provider whose `close` throws included —
-    * so the caller's cleanup after the unload still runs. */
+  /** Unload only the providers rooted at `ckRoot`: unloadAll() would
+    * also close a concurrently running stateful query's providers
+    * mid-batch and force it into checkpoint reloads. Each provider goes
+    * through Spark's `private[sql]` removeFromLoadedProvidersAndClose,
+    * which drops it from the map before closing it, in its own try: a
+    * provider whose `close` throws is logged and the rest are still
+    * closed. Falls back to unloadAll() only if the private map's shape
+    * ever changes, so the caller's cleanup after the unload still
+    * runs. */
   def unloadForCheckpoint(ckRoot: String): Unit = {
-    try {
-      val f = StateStore.getClass.getDeclaredField("loadedProviders")
-      f.setAccessible(true)
-      val map = f.get(StateStore).asInstanceOf[
-        scala.collection.mutable.HashMap[StateStoreProviderId,
-          StateStoreProvider]]
-      // contains, not startsWith: the provider's root is the resolved
-      // "<scheme>:<ckRoot>/state" path, and ckRoot (pid + per-run qn)
-      // is globally unique, so a substring match is exact
-      val ids = map.synchronized {
-        map.keys.filter(
-          _.storeId.checkpointRootLocation.contains(ckRoot)).toList
-      }
-      ids.foreach(id => StateStore.removeFromLoadedProvidersAndClose(id))
-    } catch {
+    val ids = try loadedUnder(ckRoot) catch {
       case NonFatal(e) =>
         logWarning(s"scoped state-store unload failed, unloading all: $e")
         StateStore.unloadAll()
+        Nil
+    }
+    ids.foreach { id =>
+      try StateStore.removeFromLoadedProvidersAndClose(id)
+      catch {
+        case NonFatal(e) =>
+          logWarning(s"closing state-store provider $id failed: $e")
+      }
     }
   }
 }

@@ -109,4 +109,23 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
     assert(hits == List("graft/spectral/Gls.scala"),
       s"GLS closed form restated outside Gls: $hits")
   }
+
+  test("each query is registered once, and only SparkEntry lists the modules") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        java.nio.file.Files.readString(p)).toList
+    val oracleMaps = sources.collect {
+      case (p, src) if raw"\bval oracles\b".r.findFirstIn(src).isDefined => p
+    }
+    assert(oracleMaps.isEmpty, s"parallel oracle maps: $oracleMaps")
+    // a module's registration read by name, e.g. tsa.Vmd.queries
+    val moduleRef = raw"\b(?!SparkEntry\b)[A-Z]\w*\.queries\b".r
+    val listers = sources.collect {
+      case (p, src) if moduleRef.findFirstIn(src).isDefined => p
+    }
+    assert(listers == List("graft/SparkEntry.scala"),
+      s"modules enumerated outside SparkEntry: $listers")
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.Replay
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.graft.{CloseFailingProvider, StateStoreBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +24,7 @@ class ReplayCleanupSpec extends AnyFunSuite with GraftSpark {
     CloseFailingProvider.failures.set(failures)
     try {
       val out = scala.util.Try(
-        Replay.queries("streaming_gls_replay")(spark, dir).count()).toEither
+        Replay.streamingGlsReplay(spark, dir).count()).toEither
       assert(CloseFailingProvider.failures.get < failures,
         "the replay's unload never reached the throwing close")
       out
@@ -43,13 +44,34 @@ class ReplayCleanupSpec extends AnyFunSuite with GraftSpark {
     assert(ckDirs == before, s"checkpoint left behind: ${ckDirs -- before}")
   }
 
-  test("the checkpoint is deleted even when the fallback unload throws too") {
-    val before = ckDirs
+  test("every close throws: the replay unloads all its providers and only its own") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // a second stateful query, still running while the replay unloads
+    val otherCk = java.nio.file.Files.createTempDirectory("other-ck").toFile
+    val input = MemoryStream[Int]
+    val other = input.toDS().groupBy("value").count().writeStream
+      .outputMode("complete").format("memory").queryName("other_counts")
+      .option("checkpointLocation", otherCk.getPath).start()
     try {
+      input.addData(1, 2, 2)
+      other.processAllAvailable()
+      val otherRoot = otherCk.getCanonicalPath
+      assert(StateStoreBridge.loadedUnder(otherRoot).nonEmpty)
+      val before = ckDirs
       val out = replayWithFailingCloses(Int.MaxValue)
-      assert(out.left.exists(_.isInstanceOf[IllegalStateException]),
-        s"expected the close failure to surface: $out")
+      assert(out.exists(_ > 0), s"replay failed: $out")
+      assert(StateStoreBridge.loadedUnder(
+        s"${Scratch.replayCkBase()}/gls_replay_").isEmpty,
+        "replay providers left loaded")
+      assert(StateStoreBridge.loadedUnder(otherRoot).nonEmpty,
+        "the running query's providers were unloaded")
       assert(ckDirs == before, s"checkpoint left behind: ${ckDirs -- before}")
-    } finally StateStoreBridge.unloadAll() // the providers left loaded
+    } finally {
+      other.stop()
+      StateStoreBridge.unloadForCheckpoint(otherCk.getCanonicalPath)
+      spark.catalog.dropTempView("other_counts")
+      Scratch.rm(otherCk)
+    }
   }
 }
