@@ -141,7 +141,8 @@ object Dedup {
     }
   }
 
-  private def md5Hex(s: String): String =
+  /** Lower-case hex MD5 of the UTF-8 bytes (the oracles' md5()). */
+  private[graft] def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString

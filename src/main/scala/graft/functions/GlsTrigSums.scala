@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -49,16 +46,13 @@ case class GlsTrigSums(
     withY: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Double]] {
+    extends DoubleArrayAggregate {
 
-  private val bufLen = if (withY) 2 * nf + 3 else 4 * nf + 1
+  override protected val bufLen: Int = if (withY) 2 * nf + 3 else 4 * nf + 1
 
   override def children: Seq[Expression] = if (withY) Seq(tc, y) else Seq(tc)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Array[Double] =
-    new Array[Double](bufLen)
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
     val tv = tc.eval(input)
@@ -104,42 +98,12 @@ case class GlsTrigSums(
     buf
   }
 
-  override def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < bufLen) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
   override def eval(buf: Array[Double]): Any = {
     val n = buf(bufLen - 1)
-    val out =
-      if (withY) {
-        val o = new Array[Double](2 * nf + 2)
-        var k = 0
-        while (k < 2 * nf) { o(k) = buf(k) / n; k += 1 }
-        // ym exactly as the declarative twin: (Σcents / n) / 100
-        o(2 * nf) = (buf(2 * nf) / n) / 100.0
-        o(2 * nf + 1) = buf(2 * nf + 1) / n
-        o
-      } else {
-        val o = new Array[Double](4 * nf)
-        var k = 0
-        while (k < 4 * nf) { o(k) = buf(k) / n; k += 1 }
-        o
-      }
+    val out = buf.init.map(_ / n)
+    // ym exactly as the declarative twin: (Σcents / n) / 100
+    if (withY) out(2 * nf) /= 100.0
     ArrayData.toArrayData(out)
-  }
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(bufLen * 8)
-    bb.asDoubleBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val out = new Array[Double](bufLen)
-    ByteBuffer.wrap(bytes).asDoubleBuffer().get(out)
-    out
   }
 
   override def withNewMutableAggBufferOffset(o: Int): GlsTrigSums =

@@ -31,8 +31,8 @@ object EmbeddingStats {
 
   private val SQUARINGS = 8 // spectral-filter depth: effective G^(2^8)
 
-  /** (vec_id, i, rc): exploded components in exact integer µ units. */
-  private def comps(spark: SparkSession, dir: String): DataFrame =
+  /** (vec_id, i, rc): components in exact integer µ units; SemDedup's too. */
+  private[sim] def comps(spark: SparkSession, dir: String): DataFrame =
     Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").as("i"),

@@ -51,19 +51,14 @@ import org.apache.spark.sql.functions._
   * a pair→loser projection + one anti-join — no iteration, no driver
   * state. */
 object SemDedup {
+  import EmbeddingStats.comps
 
   private val KC = 16 // coarse cells
   private val KF = 16 // fine cells per coarse cell → K = KC·KF = 256
   private val MaxCluster = 256 // pair-generation occupancy cap
   private val Tau = 0.4 // near-duplicate cosine threshold (corpus band)
 
-  /** (vec_id, i, rc): 1e-6-quantized components (Pq discipline). */
-  private def comps(spark: SparkSession, dir: String): DataFrame =
-    Tables.table(spark, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("i"),
-        round(col("col").cast("double") * 1000000.0, 0).cast("long").as("rc"))
-
+  // kept apart from EmbeddingStats' mc (other name and whitespace)
   private val compsSql: String =
     """cq AS MATERIALIZED (
       |  SELECT vec_id, idx - 1 AS i,

@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap,
+  ExecutionException}
+
 import graft.{Query, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The adversarial skew corpus WIRED INTO the driver gate (round 14,
   * r13 verdict item 5): the r13 stressor found two genuine 100 TB
@@ -34,17 +37,33 @@ object SkewGate {
   val NBase = 5000L
   val Hot = 10000L
 
-  // one generated copy per JVM (deterministic content — splitmix64
-  // per-row seeds — so regeneration across JVMs is byte-stable)
-  @volatile private var dirCache: String = _
+  // one copy per directory and JVM; splitmix64 per-row seeds make
+  // every regeneration byte-stable
+  private val written =
+    new ConcurrentHashMap[String, CompletableFuture[String]]()
 
-  private[graft] def skewDir(spark: SparkSession): String = synchronized {
-    if (dirCache == null) {
-      val d = new java.io.File("target/tmp/skewgate").getAbsolutePath
-      CorpusGen.writeSkew(spark, d, NBase, Hot)
-      dirCache = d
+  private[graft] def skewDir(spark: SparkSession): String =
+    corpus(spark, new java.io.File("target/tmp/skewgate").getAbsolutePath)
+
+  /** `dir`, holding the skew corpus, written on the first call for
+    * `dir` in this JVM. The write runs outside every lock: concurrent
+    * callers wait on its future alone, and a write that throws leaves
+    * no holder behind, so the next call writes again. */
+  private[graft] def corpus(spark: SparkSession, dir: String): String = {
+    val mine = new CompletableFuture[String]()
+    val held = written.putIfAbsent(dir, mine)
+    if (held != null)
+      try held.get() catch { case e: ExecutionException => throw e.getCause }
+    else {
+      try CorpusGen.writeSkew(spark, dir, NBase, Hot) catch {
+        case e: Throwable =>
+          written.remove(dir, mine)
+          mine.completeExceptionally(e)
+          throw e
+      }
+      mine.complete(dir)
+      dir
     }
-    dirCache
   }
 
   private val SkewSrc =

@@ -33,11 +33,15 @@ import org.apache.spark.sql.functions._
   * DAYS (td = tc/86400) so M's diagonal stays balanced; series with
   * n < 8 points or zero variance are excluded (M must be SPD).
   *
-  * Scale shape: identical to glsPeriodogram — one broadcast grid
-  * fan-out, ONE groupBy(id, k) with 14 map-side-combined sum/count
-  * aggregates, then per-row closed-form algebra and a 200-row/series
-  * window for the per-series normalisation. Embarrassingly parallel
-  * in series count.
+  * Scale shape: one broadcast grid fan-out, ONE groupBy(id, k) with
+  * 14 map-side-combined sum/count aggregates, then per-row closed-form
+  * algebra and a 200-row/series window for the per-series
+  * normalisation. Embarrassingly parallel in series count.
+  *
+  * Not a [[graft.functions.GlsMoments]] buffer, as the fixed-grid GLS
+  * operators use: M needs the products c·c, c·s, s·s (not bit-equal to
+  * its cos 2ω, sin 2ω; the oracle sums the products) and td·c, td·s —
+  * 5 more slots per harmonic that no other caller reads.
   */
 object Bglst {
   import Gls.{DF, NF}

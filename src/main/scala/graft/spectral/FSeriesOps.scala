@@ -29,12 +29,7 @@ object FSeriesOps {
     * strictly-higher grid point on each side (null → grid edge). */
   private def peaksWithBounds(spark: SparkSession, dir: String): DataFrame = {
     val pg = Gls.glsPeriodogram(spark, dir)
-    val wk = Window.partitionBy("id").orderBy("k")
-    val peaks = pg
-      .withColumn("pm", lag("power", 1).over(wk))
-      .withColumn("pp", lead("power", 1).over(wk))
-      .filter(col("pm").isNotNull && col("pp").isNotNull &&
-        col("power") > col("pm") && col("power") > col("pp"))
+    val peaks = Gls.localPeaks(pg)
       .select(col("id"), col("k").as("pk"), col("power").as("ppow"))
     // nearest strictly-higher sample left/right of each peak (left
     // join: the series' global maximum has none on either side)
@@ -140,17 +135,8 @@ object FSeriesOps {
       .filter(col("rn") === 1)
       .select(col("id"), col("k").as("kstar"),
         col("power").as("best_power"), col("prominence"))
-    val pg = Gls.glsPeriodogram(spark, dir)
-    val below = pg.join(kstar, "id")
-      .filter(col("power") < col("best_power") - col("prominence") / 2.0)
-    val lo = below.filter(col("k") < col("kstar"))
-      .groupBy("id").agg(max("k").as("kl"))
-    val hi = below.filter(col("k") > col("kstar"))
-      .groupBy("id").agg(min("k").as("ku"))
-    kstar.join(lo, Seq("id"), "left").join(hi, Seq("id"), "left")
-      .select(col("id"), col("kstar"), col("prominence"),
-        round(lit(1.0 / DF) / col("ku"), 4).as("period_lo"),
-        round(lit(1.0 / DF) / col("kl"), 4).as("period_hi"))
+    Gls.periodsAbove(Gls.glsPeriodogram(spark, dir), kstar,
+      col("best_power") - col("prominence") / 2.0, "prominence")
   }
 
   val glsHalfWidthProminenceSql: String =

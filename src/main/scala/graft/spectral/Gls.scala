@@ -2,7 +2,7 @@ package graft.spectral
 
 import graft.{Query, Tables}
 import graft.functions.GlsMoments
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * and partition, no ×grid explode ahead of it — embarrassingly
   * parallel and exact (no NFFT gridding error). The harmonics are
   * exploded after the aggregate and read by [[glsPower]], the one
-  * closed form. Uniform weights w=1/n, fit_mean=true.
+  * closed form. Uniform weights w=1/n, fit_mean=true. The window,
+  * weighted and DFT variants read the same buffer.
   *
   * Frequency grid: f_k = k / (30 days), k = 1..200 (periods 30 d down
   * to 3.6 h), matching the reference's uniform grid construction.
@@ -28,7 +29,7 @@ object Gls {
   val DF: Double = 1.0 / (30.0 * 86400.0) // frequency step (Hz)
   val NF: Int = 200
 
-  /** Per-series t0/mean, centered time tc and demeaned yc. */
+  /** Per-series t0/mean, centered time tc and demeaned yc, beside y. */
   private[graft] def centered(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.series(spark, dir)
     val stats = s.groupBy("id")
@@ -40,7 +41,7 @@ object Gls {
         count(lit(1)).as("n"))
     s.join(broadcast(stats), "id")
       .select(col("id"), (col("t") - col("t0")).as("tc"),
-        (col("y") - col("ymean")).as("yc"))
+        (col("y") - col("ymean")).as("yc"), col("y"))
   }
 
   private[spectral] val centeredSql: String =
@@ -53,18 +54,23 @@ object Gls {
        |c AS (SELECT s.id, s.t - st.t0 AS tc, s.y - st.ymean AS yc
        |      FROM s JOIN st USING (id))""".stripMargin
 
-  /** Trig moments per (id, k): all means over the series (w = 1/n).
-    * One [[GlsMoments]] buffer per series, exploded to the NF
-    * harmonics after the aggregate. */
-  private[graft] def moments(spark: SparkSession, dir: String): DataFrame =
-    centered(spark, dir)
-      .groupBy("id")
-      .agg(GlsMoments.column(spark, col("tc"), col("yc"),
-        2.0 * math.Pi * DF, NF).as("m"))
+  /** The GLS moment frame (id, k, C, S, Ch, Sh, C2, S2, YY) of
+    * `c(id, tc, …)` with signal `y` on the fixed grid: one
+    * [[GlsMoments]] buffer per series, exploded to the NF harmonics
+    * after the aggregate. `weight` and `sums` pass through to it. */
+  private def gridMoments(c: DataFrame, y: Column,
+      weight: Option[Column] = None, sums: Boolean = false): DataFrame =
+    c.groupBy("id")
+      .agg(GlsMoments.column(c.sparkSession, col("tc"), y,
+        2.0 * math.Pi * DF, NF, weight, sums).as("m"))
       .select(col("id"), col("m.y2").as("YY"), inline(col("m.h")))
       .select(col("id"), col("k").cast("long").as("k"), col("C"), col("S"),
         col("ycos").as("Ch"), col("ysin").as("Sh"), col("C2"), col("S2"),
         col("YY"))
+
+  /** Trig moments per (id, k): all means over the series (w = 1/n). */
+  private[graft] def moments(spark: SparkSession, dir: String): DataFrame =
+    gridMoments(centered(spark, dir), col("yc"))
 
   private val momentsSql: String =
     s"""WITH ${centeredSql},
@@ -149,20 +155,27 @@ object Gls {
 
   /** period_at_highest_peak — reference core.py:952: the period of the
     * highest local maximum of the periodogram. */
-  def glsBestPeriod(spark: SparkSession, dir: String): DataFrame = {
-    val pg = glsPeriodogram(spark, dir)
-    val wk = Window.partitionBy("id").orderBy("k")
-    val peaks = pg
-      .withColumn("pm", lag("power", 1).over(wk))
-      .withColumn("pp", lead("power", 1).over(wk))
-      .filter(col("pm").isNotNull && col("pp").isNotNull &&
-        col("power") > col("pm") && col("power") > col("pp"))
-    val best = peaks.groupBy("id").agg(max("power").as("best_power"))
-    peaks.join(best, "id")
-      .filter(col("power") === col("best_power"))
+  def glsBestPeriod(spark: SparkSession, dir: String): DataFrame =
+    bestPeaks(glsPeriodogram(spark, dir))
       .groupBy("id", "best_power")
       .agg(round(min(lit(1.0 / DF) / col("k")), 6).as("best_period"))
       .select("id", "best_period", "best_power")
+
+  /** The strict local maxima of a periodogram `pg(id, k, power, …)`. */
+  private[spectral] def localPeaks(pg: DataFrame): DataFrame = {
+    val wk = Window.partitionBy("id").orderBy("k")
+    pg.withColumn("pm", lag("power", 1).over(wk))
+      .withColumn("pp", lead("power", 1).over(wk))
+      .filter(col("pm").isNotNull && col("pp").isNotNull &&
+        col("power") > col("pm") && col("power") > col("pp"))
+  }
+
+  /** The rows of each series' highest local maximum of `pg`, with its
+    * `best_power` (every row at that power, on ties). */
+  private[spectral] def bestPeaks(pg: DataFrame): DataFrame = {
+    val peaks = localPeaks(pg)
+    val best = peaks.groupBy("id").agg(max("power").as("best_power"))
+    peaks.join(best, "id").filter(col("power") === col("best_power"))
   }
 
   val glsBestPeriodSql: String =
@@ -182,26 +195,17 @@ object Gls {
        |GROUP BY peaks.id, best.best_power""".stripMargin
 
   /** Spectral window — reference spectral.py:165 (GLS.window): GLS of
-    * the constant-1 signal with fit_mean=false. With y ≡ 1 and no mean
-    * fit, Ch = avg(cos), Sh = avg(sin), YY = 1 and the mean terms
-    * C = S = 0 drop out of the closed form — the same IEEE
-    * computation as the fit_mean=false formula written out. */
-  def glsWindow(spark: SparkSession, dir: String): DataFrame = {
-    val s = Tables.series(spark, dir)
-    val t0 = s.groupBy("id").agg(min("t").as("t0"))
-    val freqs = spark.range(1, NF + 1).toDF("k")
-    val omega = lit(2.0 * math.Pi * DF) * col("k") * (col("t") - col("t0"))
-    val m = s.join(broadcast(t0), "id")
-      .crossJoin(broadcast(freqs))
-      .select(col("id"), col("k"),
-        cos(omega).as("cw"), sin(omega).as("sw"),
-        cos(omega * 2.0).as("c2w"), sin(omega * 2.0).as("s2w"))
-      .groupBy("id", "k")
-      .agg(avg("cw").as("Ch"), avg("sw").as("Sh"),
-        avg("c2w").as("C2"), avg("s2w").as("S2"),
-        lit(0.0).as("C"), lit(0.0).as("S"), lit(1.0).as("YY"))
-    glsPower(m).select("id", "k", "power")
-  }
+    * the constant-1 signal with fit_mean=false. With y ≡ 1 the
+    * buffer's Ch and Sh are avg(cos) and avg(sin) and its YY is
+    * exactly 1; without a mean fit the terms C = S = 0 drop out of the
+    * closed form — the same IEEE computation as the fit_mean=false
+    * formula written out. A row with a null y still counts. */
+  def glsWindow(spark: SparkSession, dir: String): DataFrame =
+    glsPower(windowMoments(spark, dir)).select("id", "k", "power")
+
+  private[graft] def windowMoments(spark: SparkSession, dir: String): DataFrame =
+    gridMoments(centered(spark, dir), lit(1.0))
+      .withColumn("C", lit(0.0)).withColumn("S", lit(0.0))
 
   val glsWindowSql: String =
     s"""WITH s AS (${Tables.seriesSql}),
@@ -226,14 +230,9 @@ object Gls {
   val F0: Double = 10.0 * DF
 
   def glsModel(spark: SparkSession, dir: String): DataFrame = {
-    val s = Tables.series(spark, dir)
-    val stats = s.groupBy("id")
-      .agg(min("t").as("t0"),
-        (sum(round(col("y") * 100.0, 0).cast("long")).cast("double") /
-          count(lit(1)) / 100.0).as("ymean"))
-    val omega = lit(2.0 * math.Pi * F0) * (col("t") - col("t0"))
-    val m = s.join(broadcast(stats), "id")
-      .select(col("id"), (col("y") - col("ymean")).as("yc"),
+    val omega = lit(2.0 * math.Pi * F0) * col("tc")
+    val m = centered(spark, dir)
+      .select(col("id"), col("yc"),
         sin(omega).as("sn"), cos(omega).as("cs"), col("y"))
       .groupBy("id")
       .agg(count(lit(1)).cast("double").as("n"),
@@ -307,17 +306,14 @@ object Gls {
   }
 
   /** Direct DFT power spectrum — reference core.py:546/554 (fft/psd):
-    * |Σ yc e^{-iωtc}|² on the broadcast frequency grid. */
-  def psdDft(spark: SparkSession, dir: String): DataFrame = {
-    val freqs = spark.range(1, NF + 1).toDF("k")
-    val omega = lit(2.0 * math.Pi * DF) * col("k") * col("tc")
-    centered(spark, dir)
-      .crossJoin(broadcast(freqs))
-      .select(col("id"), col("k"),
-        (col("yc") * cos(omega)).as("re"), (col("yc") * sin(omega)).as("im"))
-      .groupBy("id", "k")
-      .agg(round(sum("re") * sum("re") + sum("im") * sum("im"), 3).as("power"))
-  }
+    * |Σ yc e^{-iωtc}|² on the fixed grid, from the raw sums. */
+  def psdDft(spark: SparkSession, dir: String): DataFrame =
+    dftSums(spark, dir).select(col("id"), col("k"),
+      round(col("Ch") * col("Ch") + col("Sh") * col("Sh"), 3).as("power"))
+
+  /** Raw sums per (id, k); Ch and Sh are Σ yc·cos and Σ yc·sin. */
+  private[graft] def dftSums(spark: SparkSession, dir: String): DataFrame =
+    gridMoments(centered(spark, dir), col("yc"), sums = true)
 
   val psdDftSql: String =
     s"""WITH ${centeredSql}
@@ -333,29 +329,20 @@ object Gls {
     * uncertainties: w_i ∝ err_i^{-2}. The events table carries no err
     * column, so a Poisson-like model err_i = 0.1·√y_i stands in
     * (w_i ∝ 1/y_i) — the operator exercises the full weighted path:
-    * every moment is a ratio of weighted sums, still one aggregation
-    * pass per (series, frequency). */
-  def glsWeighted(spark: SparkSession, dir: String): DataFrame = {
+    * every moment is a ratio of weighted sums, from one weighted
+    * [[GlsMoments]] buffer per series. */
+  def glsWeighted(spark: SparkSession, dir: String): DataFrame =
+    glsPower(weightedMoments(spark, dir)).select("id", "k", "power")
+
+  private[graft] def weightedMoments(spark: SparkSession,
+      dir: String): DataFrame = {
     val s = Tables.series(spark, dir).withColumn("wt", lit(1.0) / col("y"))
     val stats = s.groupBy("id").agg(min("t").as("t0"),
       (sum(col("wt") * col("y")) / sum("wt")).as("ymean"))
-    val freqs = spark.range(1, NF + 1).toDF("k")
-    val omega = lit(2.0 * math.Pi * DF) * col("k") * (col("t") - col("t0"))
-    val m = s.join(broadcast(stats), "id")
-      .crossJoin(broadcast(freqs))
-      .select(col("id"), col("k"), col("wt"),
-        cos(omega).as("cw"), sin(omega).as("sw"),
-        cos(omega * 2.0).as("c2w"), sin(omega * 2.0).as("s2w"),
+    val c = s.join(broadcast(stats), "id")
+      .select(col("id"), col("wt"), (col("t") - col("t0")).as("tc"),
         (col("y") - col("ymean")).as("yc"))
-      .groupBy("id", "k")
-      .agg((sum(col("wt") * col("cw")) / sum("wt")).as("C"),
-        (sum(col("wt") * col("sw")) / sum("wt")).as("S"),
-        (sum(col("wt") * col("yc") * col("cw")) / sum("wt")).as("Ch"),
-        (sum(col("wt") * col("yc") * col("sw")) / sum("wt")).as("Sh"),
-        (sum(col("wt") * col("c2w")) / sum("wt")).as("C2"),
-        (sum(col("wt") * col("s2w")) / sum("wt")).as("S2"),
-        (sum(col("wt") * col("yc") * col("yc")) / sum("wt")).as("YY"))
-    glsPower(m).select("id", "k", "power")
+    gridMoments(c, col("yc"), Some(col("wt")))
   }
 
   val glsWeightedSql: String = {
@@ -384,24 +371,23 @@ object Gls {
     * either side (FWHM-style line width of the detection). */
   def glsHalfWidth(spark: SparkSession, dir: String): DataFrame = {
     val pg = glsPeriodogram(spark, dir)
-    val wk = Window.partitionBy("id").orderBy("k")
-    val peaks = pg
-      .withColumn("pm", lag("power", 1).over(wk))
-      .withColumn("pp", lead("power", 1).over(wk))
-      .filter(col("pm").isNotNull && col("pp").isNotNull &&
-        col("power") > col("pm") && col("power") > col("pp"))
-    val best = peaks.groupBy("id").agg(max("power").as("best_power"))
-    val kstar = peaks.join(best, "id")
-      .filter(col("power") === col("best_power"))
+    val kstar = bestPeaks(pg)
       .groupBy("id", "best_power").agg(min("k").as("kstar"))
-    val below = pg.join(kstar, "id")
-      .filter(col("power") < col("best_power") / 2.0)
+    periodsAbove(pg, kstar, col("best_power") / 2.0, "best_power")
+  }
+
+  /** `kstar(id, kstar, keep, …)` with the period interval around kstar
+    * where periodogram `pg` first falls below `cut` on either side
+    * (null: it never does). */
+  private[spectral] def periodsAbove(pg: DataFrame, kstar: DataFrame,
+      cut: Column, keep: String): DataFrame = {
+    val below = pg.join(kstar, "id").filter(col("power") < cut)
     val lo = below.filter(col("k") < col("kstar"))
       .groupBy("id").agg(max("k").as("kl"))
     val hi = below.filter(col("k") > col("kstar"))
       .groupBy("id").agg(min("k").as("ku"))
     kstar.join(lo, Seq("id"), "left").join(hi, Seq("id"), "left")
-      .select(col("id"), col("kstar"), col("best_power"),
+      .select(col("id"), col("kstar"), col(keep),
         round(lit(1.0 / DF) / col("ku"), 4).as("period_lo"),
         round(lit(1.0 / DF) / col("kl"), 4).as("period_hi"))
   }

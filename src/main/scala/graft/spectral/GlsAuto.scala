@@ -27,6 +27,10 @@ import org.apache.spark.sql.functions._
   * events_quantiles precedent); it only enters the integer grid
   * length `nf` through floor(round(·, 6)), so a last-ulp divergence
   * cannot shift the row set.
+  *
+  * Not a [[graft.functions.GlsMoments]] buffer: it takes one literal ω
+  * and harmonics (ω·k)·tc, while here ω = 2π·(fmin + k·dfq) with each
+  * series' own fmin, dfq and nf, the product the oracle computes.
   */
 object GlsAuto {
   /** Samples per peak (reference spectral.py:64 default). */
@@ -131,21 +135,11 @@ object GlsAuto {
     * core.py:952 via the default-grid path the reference's own
     * test_can_find_periods exercises: strict local max, best power,
     * earliest k on ties; period = 1/freq in seconds. */
-  def glsAutogridBest(spark: SparkSession, dir: String): DataFrame = {
-    val pg = glsAutogrid(spark, dir)
-    val wk = Window.partitionBy("id").orderBy("k")
-    val peaks = pg
-      .withColumn("pm", lag("power", 1).over(wk))
-      .withColumn("pp", lead("power", 1).over(wk))
-      .filter(col("pm").isNotNull && col("pp").isNotNull &&
-        col("power") > col("pm") && col("power") > col("pp"))
-    val best = peaks.groupBy("id").agg(max("power").as("best_power"))
-    peaks.join(best, "id")
-      .filter(col("power") === col("best_power"))
+  def glsAutogridBest(spark: SparkSession, dir: String): DataFrame =
+    Gls.bestPeaks(glsAutogrid(spark, dir))
       .groupBy("id", "best_power")
       .agg(round(min(lit(1e6) / col("freq_uhz")), 4).as("best_period"))
       .select("id", "best_period", "best_power")
-  }
 
   val glsAutogridBestSql: String =
     s"""$glsAutogridCte,

@@ -18,14 +18,15 @@ object PhaseFold {
   val NP_SL = 100 // string-length trial periods
   val NP_PDM = 60 // PDM trial periods (p_j = 21600 * j: 6 h .. 15 d)
 
-  private def centered(spark: SparkSession, dir: String): DataFrame = {
+  /** (id, tc, y, eid), tc from the series' first sample; PhaseFold2's too. */
+  private[spectral] def centered(spark: SparkSession, dir: String): DataFrame = {
     val s = Tables.series(spark, dir)
     val t0 = s.groupBy("id").agg(min("t").as("t0"))
     s.join(broadcast(t0), "id")
       .select(col("id"), (col("t") - col("t0")).as("tc"), col("y"), col("eid"))
   }
 
-  private val centeredSql: String =
+  private[spectral] val centeredSql: String =
     s"""s AS (${Tables.seriesSql}),
        |t0 AS (SELECT id, min(t) AS t0 FROM s GROUP BY id),
        |c AS (SELECT s.id, s.t - t0.t0 AS tc, s.y, s.eid

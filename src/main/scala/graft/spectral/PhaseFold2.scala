@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.{Query, Tables}
+import graft.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,22 +22,10 @@ import org.apache.spark.sql.functions._
   * j = 1..60 (6 h .. 15 d); nb = 10 phase bins.
   */
 object PhaseFold2 {
+  import PhaseFold.{centered, centeredSql}
 
   private val NP = PhaseFold.NP_PDM // 60 trial periods, p_j = 21600 s · j
   private val NB = 10 // phase bins
-
-  private def centered(spark: SparkSession, dir: String): DataFrame = {
-    val s = Tables.series(spark, dir)
-    val t0 = s.groupBy("id").agg(min("t").as("t0"))
-    s.join(broadcast(t0), "id")
-      .select(col("id"), (col("t") - col("t0")).as("tc"), col("y"), col("eid"))
-  }
-
-  private val centeredSql: String =
-    s"""s AS (${Tables.seriesSql}),
-       |t0 AS (SELECT id, min(t) AS t0 FROM s GROUP BY id),
-       |c AS (SELECT s.id, s.t - t0.t0 AS tc, s.y, s.eid
-       |      FROM s JOIN t0 USING (id))""".stripMargin
 
   /** Per-(series, period, bin) sample moments — the shared first
     * exchange: fold is a projection over the broadcast grid, the

@@ -378,17 +378,12 @@ object Replay {
   // VERBATIM, so suppression is exercised even on a duplicate-free
   // gate corpus. Oracle: the batch dedup_exact canonical set.
   // -------------------------------------------------------------------
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"${b & 0xff}%02x").mkString
-
   def streamingDedupReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .as[StreamingOps.Doc].collect().sortBy(_.doc_id).toSeq
-    val groups = docs.groupBy(d => md5Hex(d.text)).values
+    val groups = docs.groupBy(d => graft.dedup.Dedup.md5Hex(d.text)).values
       .map(_.sortBy(_.doc_id)).toSeq
     val winners = groups.map(_.head).sortBy(_.doc_id)
     val losers = groups.flatMap(_.tail).sortBy(_.doc_id)

@@ -110,19 +110,43 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
       s"GLS closed form restated outside Gls: $hits")
   }
 
-  test("each query is registered once, and only SparkEntry lists the modules") {
+  /** (path under src/main/scala, text) of every main source. */
+  private lazy val mainSources = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    val sources = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString ->
         java.nio.file.Files.readString(p)).toList
-    val oracleMaps = sources.collect {
+  }
+
+  test("the mended formulas keep one definition each") {
+    def definers(pattern: String, among: String => Boolean = _ => true) =
+      mainSources.collect {
+        case (p, src) if among(p) && pattern.r.findFirstIn(src).isDefined => p
+      }
+    // every fixed-grid GLS/PSD trig sum goes through GlsMoments
+    assert(definers(raw"crossJoin\(broadcast\(freqs\)\)",
+      _ == "graft/spectral/Gls.scala").isEmpty,
+      "a fixed-grid trig sum in Gls bypasses GlsMoments")
+    assert(definers(raw"\b(def centered|val centeredSql)\b",
+      _.startsWith("graft/spectral/PhaseFold")) ==
+      List("graft/spectral/PhaseFold.scala"))
+    assert(definers(raw"\bdef md5Hex\b") == List("graft/dedup/Dedup.scala"))
+    // the periodogram peak pick (Gls.localPeaks)
+    assert(definers("""lag\("power", 1\)""") == List("graft/spectral/Gls.scala"))
+    // the embeddings' µ-quantized (vec_id, i, rc) components
+    assert(definers("""col\("pos"\)\.as\("i"\),\s*round\(col\("col"\)""") ==
+      List("graft/sim/EmbeddingStats.scala"))
+  }
+
+  test("each query is registered once, and only SparkEntry lists the modules") {
+    val oracleMaps = mainSources.collect {
       case (p, src) if raw"\bval oracles\b".r.findFirstIn(src).isDefined => p
     }
     assert(oracleMaps.isEmpty, s"parallel oracle maps: $oracleMaps")
     // a module's registration read by name, e.g. tsa.Vmd.queries
     val moduleRef = raw"\b(?!SparkEntry\b)[A-Z]\w*\.queries\b".r
-    val listers = sources.collect {
+    val listers = mainSources.collect {
       case (p, src) if moduleRef.findFirstIn(src).isDefined => p
     }
     assert(listers == List("graft/SparkEntry.scala"),
