@@ -273,9 +273,10 @@ object Dedup {
       (shiftright(col("simhash"), 30) % 32768).as("band2"),
       (shiftright(col("simhash"), 45) % 32768).as("band3"))
 
-  val dedupSimhashSql: String =
-    s"""WITH $tokensSql,
-       |th AS (SELECT doc_id, ${h60Sql("tok")} AS h FROM tk),
+  /** The SQL twin of [[simhashSig]]: per-bit votes over the token
+    * hashes of the oracles' `tk`, then the 60-bit `sim` signature. */
+  private val simhashSigSql: String =
+    s"""th AS (SELECT doc_id, ${h60Sql("tok")} AS h FROM tk),
        |votes AS (SELECT doc_id, b.bit,
        |  sum((h >> b.bit) % 2 * 2 - 1) AS votes
        |  FROM th CROSS JOIN generate_series(0, 59) AS b(bit)
@@ -283,7 +284,11 @@ object Dedup {
        |sim AS (SELECT doc_id,
        |  cast(sum(CASE WHEN votes > 0 THEN (1::BIGINT << bit)
        |           ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY 1)
+       |  FROM votes GROUP BY 1)""".stripMargin
+
+  val dedupSimhashSql: String =
+    s"""WITH $tokensSql,
+       |$simhashSigSql
        |SELECT doc_id, simhash,
        |  simhash % 32768 AS band0,
        |  (simhash >> 15) % 32768 AS band1,
@@ -331,15 +336,7 @@ object Dedup {
       s"SELECT doc_id, simhash, ${b}::BIGINT AS band, (simhash >> ${10 * b}) % 1024 AS bkey FROM sim")
       .mkString("\n       | UNION ALL ")
     s"""WITH $tokensSql,
-       |th AS (SELECT doc_id, ${h60Sql("tok")} AS h FROM tk),
-       |votes AS (SELECT doc_id, b.bit,
-       |  sum((h >> b.bit) % 2 * 2 - 1) AS votes
-       |  FROM th CROSS JOIN generate_series(0, 59) AS b(bit)
-       |  GROUP BY 1, 2),
-       |sim AS (SELECT doc_id,
-       |  cast(sum(CASE WHEN votes > 0 THEN (1::BIGINT << bit)
-       |           ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY 1),
+       |$simhashSigSql,
        |bands0 AS ($bandSel),
        |bands AS (SELECT doc_id, simhash, band, bkey FROM (
        |  SELECT doc_id, simhash, band, bkey,

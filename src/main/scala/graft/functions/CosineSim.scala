@@ -81,8 +81,9 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Register `cosine_sim(a, b)` for use via expr()/SQL (idempotent). */
+  /** Register `cosine_sim(a, b)` for use via expr()/SQL, once per
+    * session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
+    SessionFunctions.registerOnce(spark, "cosine_sim",
+      exprs => CosineSim(exprs(0), exprs(1)))
 }

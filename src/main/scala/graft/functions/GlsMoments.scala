@@ -164,11 +164,11 @@ object GlsMoments {
   /** The moment aggregate of `tc` and `y` (and `weight`; all cast to
     * double) as a Column on `spark`. ω, nf and `sums` travel as literal
     * arguments of ONE session function, `gls_moments(tc, y, ω, nf,
-    * sums[, w])`, so every grid shares its name; registering it again
-    * is idempotent. */
+    * sums[, w])`, so every grid shares its name, registered once per
+    * session. */
   def column(spark: SparkSession, tc: Column, y: Column, omega: Double,
       nf: Int, weight: Option[Column] = None, sums: Boolean = false): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(Name,
+    SessionFunctions.registerOnce(spark, Name,
       exprs => {
         require(exprs.length >= 5 && exprs.slice(2, 5).forall(_.foldable),
           s"$Name(tc, y, omega, nf, sums[, w]): omega, nf and sums must be literals")
@@ -176,8 +176,7 @@ object GlsMoments {
           exprs(2).eval().asInstanceOf[Number].doubleValue,
           exprs(3).eval().asInstanceOf[Number].intValue,
           exprs.lift(5), exprs(4).eval().asInstanceOf[Boolean])
-      },
-      "built-in")
+      })
     call_function(Name, Seq(tc.cast(DoubleType), y.cast(DoubleType),
       lit(omega), lit(nf), lit(sums)) ++ weight.map(_.cast(DoubleType)): _*)
   }

@@ -117,17 +117,20 @@ case class GlsTrigSums(
 }
 
 object GlsTrigSums {
-  /** Register `gls_trig_y(tc, y)` and `gls_trig_base(tc)` (idempotent);
-    * the analyzer wraps the bare AggregateFunction in an
+  /** The one grid of its one caller, `GlsBootstrap.glsFap`: harmonics
+    * k = 1..Nf of the base ω = 2π·Gls.DF. Fixed here rather than passed
+    * in, so the functions registered once per session cannot carry a
+    * stale grid. */
+  val Nf = 50
+  val Omega: Double = 2.0 * math.Pi * graft.spectral.Gls.DF
+
+  /** Register `gls_trig_y(tc, y)` and `gls_trig_base(tc)` once per
+    * session; the analyzer wraps the bare AggregateFunction in an
     * AggregateExpression. */
-  def register(spark: SparkSession, omega: Double, nf: Int): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gls_trig_y",
-      exprs => GlsTrigSums(exprs(0), exprs(1), omega, nf, withY = true),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gls_trig_base",
-      exprs => GlsTrigSums(exprs(0), exprs(0), omega, nf, withY = false),
-      "built-in")
+  def register(spark: SparkSession): Unit = {
+    SessionFunctions.registerOnce(spark, "gls_trig_y",
+      exprs => GlsTrigSums(exprs(0), exprs(1), Omega, Nf, withY = true))
+    SessionFunctions.registerOnce(spark, "gls_trig_base",
+      exprs => GlsTrigSums(exprs(0), exprs(0), Omega, Nf, withY = false))
   }
 }

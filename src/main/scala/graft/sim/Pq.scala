@@ -34,7 +34,7 @@ object Pq {
   private val SUBD = 8 // dims per subspace (d = 64)
   private val K = 64 // codes per subspace
   private val NQ = 10 // query vectors: vec_id < NQ (= Similarity)
-  private val TOPK = 5
+  private val TOPK = Similarity.TOPK
 
   /** (vec_id, m, si, rc): µ-quantized components keyed by subspace. */
   private[sim] def comps(spark: SparkSession, dir: String): DataFrame =
@@ -128,17 +128,6 @@ object Pq {
 
   private val SHORTLIST = 50 // ADC shortlist width before exact re-rank
 
-  /** Two-stage PQ search, the production shape: (1) ADC — per-query
-    * (m, code) sub-distance lookup tables (NQ·M·K rows — broadcast)
-    * joined to the code table and summed per candidate, ranked to a
-    * SHORTLIST of 50; (2) exact re-rank — true L2 on the shortlist
-    * pairs only (work ∝ queries · SHORTLIST, a vec_id join against
-    * the raw corpus), final top-k by ROUNDED exact distance with cid
-    * tiebreak. ADC alone recalls ~0.3 of the exact top-5 on these
-    * near-isotropic embeddings (8-dim sub-quantizers distort
-    * uniformly random data badly — the known PQ worst case); the
-    * shortlist recalls ~0.9, which the exact re-rank then orders
-    * perfectly. */
   /** Per-query ADC lookup table (qid, m, code, pd): sub-distance of
     * each query sub-vector to every per-subspace centroid —
     * NQ·M·K rows, broadcast-sized at any corpus scale. Shared with
@@ -160,19 +149,39 @@ object Pq {
        |  WHERE c.vec_id < $NQ
        |  GROUP BY 1, 2, 3)""".stripMargin
 
-  def annPqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val c = comps(spark, dir)
-    val qlutDf = qlut(spark, dir)
+  /** Two-stage PQ search, the production shape: (1) ADC — per-query
+    * (m, code) sub-distance lookup tables (NQ·M·K rows — broadcast)
+    * joined to the code table and summed per candidate, ranked to a
+    * SHORTLIST of 50; (2) exact re-rank — true L2 on the shortlist
+    * pairs only (work ∝ queries · SHORTLIST, a vec_id join against
+    * the raw corpus), final top-k by ROUNDED exact distance with cid
+    * tiebreak. ADC alone recalls ~0.3 of the exact top-5 on these
+    * near-isotropic embeddings (8-dim sub-quantizers distort
+    * uniformly random data badly — the known PQ worst case); the
+    * shortlist recalls ~0.9, which the exact re-rank then orders
+    * perfectly. */
+  def annPqTopk(spark: SparkSession, dir: String): DataFrame =
+    shortlistRerank(spark, dir, embPqCodes(spark, dir)
+      .join(broadcast(qlut(spark, dir)), Seq("m", "code"))
+      .filter(col("vec_id") =!= col("qid")))
+
+  /** Both stages after candidate generation, shared with [[IvfPq]]:
+    * `cand` holds one (qid, vec_id, pd) row per code match, summed to
+    * the candidate's ADC distance and cut to a SHORTLIST per query;
+    * the exact re-rank then runs in µ-units against the raw components
+    * (the embeddings are unit-norm, so the L2 order is the cosine
+    * order). */
+  private[sim] def shortlistRerank(spark: SparkSession, dir: String,
+      cand: DataFrame): DataFrame = {
     val wa = Window.partitionBy("qid")
       .orderBy(col("adist").asc, col("cid").asc)
-    val shortlist = embPqCodes(spark, dir)
-      .join(broadcast(qlutDf), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("qid"))
+    val shortlist = cand
       .groupBy(col("qid"), col("vec_id").as("cid"))
       .agg(round(sum("pd"), 6).as("adist"))
       .withColumn("ark", row_number().over(wa))
       .filter(col("ark") <= SHORTLIST)
       .select("qid", "cid")
+    val c = comps(spark, dir)
     val qc = c.select(col("vec_id").as("qid"), col("m"), col("si"),
       col("rc").as("qrc"))
     val cc = c.select(col("vec_id").as("cid"), col("m"), col("si"),
@@ -189,17 +198,10 @@ object Pq {
       .select("qid", "cid", "l2", "rank")
   }
 
-  val annPqTopkSql: String =
-    s"""WITH $compsSql,
-       |$centroidsSql,
-       |$codesSql,
-       |$qlutSql,
-       |adist AS (SELECT q.qid, co.vec_id AS cid,
-       |    round(sum(q.pd), 6) AS adist
-       |  FROM codes co JOIN qlut q ON q.m = co.m AND q.code = co.code
-       |  WHERE co.vec_id <> q.qid
-       |  GROUP BY 1, 2),
-       |shortlist AS (SELECT qid, cid FROM (
+  /** The SQL twin of [[shortlistRerank]], over an `adist` CTE of
+    * (qid, cid, adist) and the `cq` components. */
+  private[sim] val shortlistRerankSql: String =
+    s"""shortlist AS (SELECT qid, cid FROM (
        |    SELECT qid, cid, row_number() OVER (
        |      PARTITION BY qid ORDER BY adist ASC, cid ASC) AS ark
        |    FROM adist)
@@ -216,6 +218,18 @@ object Pq {
        |  FROM l2)
        |SELECT qid, cid, l2, cast(rank AS BIGINT) AS rank
        |FROM rk WHERE rank <= $TOPK""".stripMargin
+
+  val annPqTopkSql: String =
+    s"""WITH $compsSql,
+       |$centroidsSql,
+       |$codesSql,
+       |$qlutSql,
+       |adist AS (SELECT q.qid, co.vec_id AS cid,
+       |    round(sum(q.pd), 6) AS adist
+       |  FROM codes co JOIN qlut q ON q.m = co.m AND q.code = co.code
+       |  WHERE co.vec_id <> q.qid
+       |  GROUP BY 1, 2),
+       |$shortlistRerankSql""".stripMargin
 
   val queries: Seq[Query] = Seq(
     Query("emb_pq_codes", embPqCodes, embPqCodesSql),

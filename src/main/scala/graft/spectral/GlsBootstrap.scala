@@ -2,6 +2,7 @@ package graft.spectral
 
 import graft.{Query, Tables}
 import graft.dedup.Dedup
+import graft.functions.GlsTrigSums
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,15 +50,15 @@ import org.apache.spark.sql.functions._
   */
 object GlsBootstrap {
   private val B = 25 // bootstrap replicates
-  private val NF = 50 // reduced frequency grid f_k = k/(30 d), k=1..NF
-  private val DF = Gls.DF
+  // reduced frequency grid f_k = k/(30 d), k=1..NF
+  private val NF = GlsTrigSums.Nf
   // nearest-rank 95% quantile of B maxima, 1-based
   private val FalRank = math.ceil(0.95 * B).toInt
 
-  // base angular frequency ω = 2π·DF; harmonics k·ω come from the
+  // base angular frequency ω = 2π·Gls.DF; harmonics k·ω come from the
   // angle-addition recurrence inside GlsTrigSums (2 libm calls per
   // ROW instead of 2·NF), identically on both engines
-  private val Om = 2.0 * math.Pi * DF
+  private val Om = GlsTrigSums.Omega
   /** The same recurrence as chained CTE columns: `p1` carries
     * (c1, s1) off `src`, then cₖ/sₖ build on cₖ₋₁/sₖ₋₁ — plain IEEE
     * mul/add in GlsTrigSums' exact evaluation order. */
@@ -79,7 +80,7 @@ object GlsBootstrap {
   // default the op silently degrades to sort-based aggregation —
   // correct, just slower.
   def glsFap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GlsTrigSums.register(spark, Om, NF)
+    GlsTrigSums.register(spark)
     val wOrd = Window.partitionBy("id").orderBy("t", "eid")
     val wAll = Window.partitionBy("id")
     // Explicit repartition-by-num, NOT a plain window shuffle: the

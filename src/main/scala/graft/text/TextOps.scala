@@ -409,9 +409,11 @@ object TextOps {
         round(sum(when(col("pred_lang") === col("lang"), 1).otherwise(0))
           .cast("double") / count(lit(1)), 6).as("langid_agree"))
 
-  val corpusMixStatsSql: String =
-    s"""WITH $tokSql,
-       |r AS (SELECT doc_id,
+  /** The stop-word ratios `r` and the predicted language `lid` per
+    * document, over the oracles' `tk` tokens: text_langid's formula,
+    * read by corpus_mix_stats and corpus_sample. */
+  private val langidCtesSql: String =
+    s"""r AS (SELECT doc_id,
        |  ${ratioSql(stopEn)} AS r_en, ${ratioSql(stopDe)} AS r_de,
        |  ${ratioSql(stopFr)} AS r_fr, ${ratioSql(stopEs)} AS r_es
        |  FROM tk GROUP BY 1),
@@ -420,7 +422,11 @@ object TextOps {
        |       WHEN r_de >= greatest(r_fr, r_es) THEN 'de'
        |       WHEN r_fr >= r_es THEN 'fr'
        |       ELSE 'es' END AS pred_lang
-       |  FROM r)
+       |  FROM r)""".stripMargin
+
+  val corpusMixStatsSql: String =
+    s"""WITH $tokSql,
+       |$langidCtesSql
        |SELECT d.lang, d.source, count(*) AS n_docs,
        |  cast(sum(d.n_chars) AS BIGINT) AS total_chars,
        |  round(cast(sum(CASE WHEN l.pred_lang = d.lang THEN 1 ELSE 0 END)
@@ -552,16 +558,7 @@ object TextOps {
 
   val corpusSampleSql: String =
     s"""WITH $tokSql,
-       |r AS (SELECT doc_id,
-       |  ${ratioSql(stopEn)} AS r_en, ${ratioSql(stopDe)} AS r_de,
-       |  ${ratioSql(stopFr)} AS r_fr, ${ratioSql(stopEs)} AS r_es
-       |  FROM tk GROUP BY 1),
-       |lid AS (SELECT doc_id,
-       |  CASE WHEN r_en >= greatest(r_de, r_fr, r_es) THEN 'en'
-       |       WHEN r_de >= greatest(r_fr, r_es) THEN 'de'
-       |       WHEN r_fr >= r_es THEN 'fr'
-       |       ELSE 'es' END AS pred_lang
-       |  FROM r)
+       |$langidCtesSql
        |SELECT doc_id, pred_lang,
        |  ${h60Sql("cast(doc_id AS VARCHAR)")} % 100 AS bucket
        |FROM lid

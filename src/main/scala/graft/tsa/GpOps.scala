@@ -98,6 +98,25 @@ object GpOps {
     tau => f1(tau) + f2(tau)
   }
 
+  /** ω_p = π/p and 1/(2ℓ²) with ℓ = 3p: the quasi-periodic kernel's
+    * per-period constants, and the literals of gp_period_map's oracle
+    * (SeriesOps.gpPeriodMapSql). */
+  private[tsa] def quasiPeriodicConsts(period: Double): (Double, Double) = {
+    val ell = 3.0 * period
+    (math.Pi / period, 1.0 / (2.0 * ell * ell))
+  }
+
+  /** Quasi-periodic kernel (reference gp.py QuasiPeriodicGP), the one
+    * gp_period_map scans: varY·exp(−5·sin²(ω_p·τ) − τ²/(2ℓ²)). */
+  private def quasiPeriodicKernel(varY: Double, period: Double)
+      : Double => Double = {
+    val (wp, il2) = quasiPeriodicConsts(period)
+    d => {
+      val s = math.sin(wp * d)
+      varY * math.exp(-5.0 * s * s - d * d * il2)
+    }
+  }
+
   /** Signal covariance matrix K(kf) — kernels are even in tau: fill
     * the lower triangle and mirror. Shared by every GP op below so the
     * kernel assembly cannot drift between the grid maps, gp_predict
@@ -150,47 +169,73 @@ object GpOps {
     * events-table rotation range. */
   val DefaultPeriodGrid: Array[Double] = (1 to 20).map(_ * 43200.0).toArray
 
-  /** Shared grid-MAP harness: subsample to ≤200 points, demean, scan
-    * the trial period grid, Cholesky log-marginal per period.
-    * The per-kernel merge step is built ONCE and stored in a val
-    * (below): a closure constructed per invocation would capture a
-    * fresh kernel eta-expansion, making two calls of the same map
-    * canonically different plans — which defeats the CacheManager
-    * substitution gp_predict's compose (and any persisted harmonic
-    * map) relies on. The grid is a parameter so reference
-    * parity tests can scan the spotted star's day-scale range
-    * (tests/test_gp.py MCMC medians at 10-11 d, beyond the default
-    * grid's edge); registered queries always use the default. */
+  /** One series' GP input; `diag` is the white-noise + jitter
+    * diagonal added before each factor. */
+  private final case class GpInput(t: Array[Double], yRaw: Array[Double],
+      mean: Double, y: Array[Double], varY: Double) {
+    def diag: Double = 0.2 * varY + 1e-9 * varY
+  }
+
+  /** Every stride-th sample, so that at most `cap` points remain,
+    * demeaned (`y`; `yRaw` and `mean` keep the original units), with
+    * the sample variance floored at 1e-12. None below 10 points. */
+  private def gpInput(t0: Array[Double], y0: Array[Double], cap: Int)
+      : Option[GpInput] = {
+    val stride = (t0.length + cap - 1) / cap
+    val idx = t0.indices.by(stride).toArray
+    val t = idx.map(t0)
+    val yRaw = idx.map(y0)
+    val n = t.length
+    if (n < 10) None
+    else {
+      val mean = yRaw.sum / n
+      val y = yRaw.map(_ - mean)
+      Some(GpInput(t, yRaw, mean, y,
+        math.max(y.map(v => v * v).sum / n, 1e-12)))
+    }
+  }
+
+  /** Shared grid-scan harness: subsample to ≤ `cap` points, demean,
+    * factor the noisy kernel matrix at every trial period, score each
+    * factor (−∞ where it is not positive definite), and flag the first
+    * best period. The per-kernel merge step is built ONCE and stored
+    * in a val (below): a closure constructed per invocation would
+    * capture a fresh kernel eta-expansion, making two calls of the
+    * same map canonically different plans — which defeats the
+    * CacheManager substitution gp_predict's compose (and any
+    * persisted harmonic map) relies on. */
+  private def gridScanFn(kernel: (Double, Double) => Double => Double,
+      grid: Array[Double], cap: Int,
+      score: (Array[Array[Double]], Array[Double]) => Double)
+      : (Long, Array[Double], Array[Double]) => Iterator[(Long, Double, Double, Int)] =
+    (id, t0, y0) => gpInput(t0, y0, cap) match {
+      case None => Iterator.empty
+      case Some(g) =>
+        val results = grid.toSeq.map { p =>
+          val l = noisyCholesky(kernelMatrix(kernel(g.varY, p), g.t), g.diag)
+          if (l == null) (p, Double.NegativeInfinity)
+          else (p, score(l, g.y))
+        }
+        val best = results.maxBy(_._2)._1
+        results.iterator.map { case (p, v) =>
+          (id, p, math.rint(v * 1e3) / 1e3, if (p == best) 1 else 0)
+        }
+    }
+
+  /** The grid-MAP: log marginal likelihood over ≤200 points. The grid
+    * is a parameter so reference parity tests can scan the spotted
+    * star's day-scale range (tests/test_gp.py MCMC medians at 10-11 d,
+    * beyond the default grid's edge); registered queries always use
+    * the default. */
   private def gridMapFn(kernel: (Double, Double) => Double => Double,
       grid: Array[Double])
       : (Long, Array[Double], Array[Double]) => Iterator[(Long, Double, Double, Int)] =
-    (id, t0, y0) => {
-      val stride = (t0.length + 199) / 200
-      val idx = t0.indices.by(stride).toArray
-      val t = idx.map(t0)
-      val yRaw = idx.map(y0)
-      val n = t.length
-      if (n < 10) Iterator.empty
-      else {
-        val mean = yRaw.sum / n
-        val y = yRaw.map(_ - mean)
-        val varY = math.max(y.map(v => v * v).sum / n, 1e-12)
-        val noise = 0.2 * varY
-        val results = grid.toSeq.map { p =>
-          val l = noisyCholesky(kernelMatrix(kernel(varY, p), t),
-            noise + 1e-9 * varY)
-          if (l == null) (p, Double.NegativeInfinity)
-          else (p, logMarginal(l, y))
-        }
-        val best = results.maxBy(_._2)._1
-        results.iterator.map { case (p, ll) =>
-          (id, p, math.rint(ll * 1e3) / 1e3, if (p == best) 1 else 0)
-        }
-      }
-    }
+    gridScanFn(kernel, grid, 200, logMarginal)
 
   private val brownianMapFn = gridMapFn(brownianKernel, DefaultPeriodGrid)
   private val harmonicMapFn = gridMapFn(harmonicKernel, DefaultPeriodGrid)
+  private val quasiPeriodicMapFn =
+    gridMapFn(quasiPeriodicKernel, DefaultPeriodGrid)
 
   def gpBrownianMap(spark: SparkSession, dir: String): DataFrame =
     SeriesOps.perSeries(spark, dir)(brownianMapFn)
@@ -198,6 +243,14 @@ object GpOps {
 
   def gpHarmonicMap(spark: SparkSession, dir: String): DataFrame =
     SeriesOps.perSeries(spark, dir)(harmonicMapFn)
+      .toDF("id", "period", "loglik", "is_best")
+
+  /** gp_period_map — reference gp.py (QuasiPeriodicGP): MAP period by
+    * grid search over the quasi-periodic kernel's marginal likelihood
+    * (MCMC is out of scope — the grid MAP is the Spark-native
+    * equivalent). Registered, with its oracle, in SeriesOps. */
+  def gpPeriodMap(spark: SparkSession, dir: String): DataFrame =
+    SeriesOps.perSeries(spark, dir)(quasiPeriodicMapFn)
       .toDF("id", "period", "loglik", "is_best")
 
   /** Custom-grid overloads (reference parity / exploration — fresh
@@ -224,32 +277,22 @@ object GpOps {
         : IterableOnce[(Long, Double, Double, Double, Double)] = {
       val rows = it.toArray.sortBy(r => (r._2, r._4))
       val bestP = rows(0)._5
-      val t0 = rows.map(_._2)
-      val y0 = rows.map(_._3)
-      val stride = (t0.length + 199) / 200
-      val idx = t0.indices.by(stride).toArray
-      val t = idx.map(t0)
-      val yRaw = idx.map(y0)
-      val n = t.length
-      if (n < 10 || bestP <= 0.0) Iterator.empty
-      else {
-        val mean = yRaw.sum / n
-        val y = yRaw.map(_ - mean)
-        val varY = math.max(y.map(v => v * v).sum / n, 1e-12)
-        val noise = 0.2 * varY
-        val ks = kernelMatrix(harmonicKernel(varY, bestP), t)
-        val l = noisyCholesky(ks, noise + 1e-9 * varY)
-        if (l == null) Iterator.empty
-        else {
-          val alpha = SeriesMath.choleskySolve(l, y)
-          t.indices.iterator.map { i =>
-            var mu = 0.0
-            var b = 0
-            while (b < n) { mu += ks(i)(b) * alpha(b); b += 1 }
-            (id, t(i), yRaw(i),
-              math.rint((mu + mean) * 1e4) / 1e4, bestP)
+      gpInput(rows.map(_._2), rows.map(_._3), 200) match {
+        case Some(g) if bestP > 0.0 =>
+          val ks = kernelMatrix(harmonicKernel(g.varY, bestP), g.t)
+          val l = noisyCholesky(ks, g.diag)
+          if (l == null) Iterator.empty
+          else {
+            val alpha = SeriesMath.choleskySolve(l, g.y)
+            g.t.indices.iterator.map { i =>
+              var mu = 0.0
+              var b = 0
+              while (b < g.t.length) { mu += ks(i)(b) * alpha(b); b += 1 }
+              (id, g.t(i), g.yRaw(i),
+                math.rint((mu + g.mean) * 1e4) / 1e4, bestP)
+            }
           }
-        }
+        case _ => Iterator.empty
       }
     }
   }
@@ -259,7 +302,7 @@ object GpOps {
     * training points for the MAP period of the harmonic (RotationTerm)
     * kernel. With α = (K_signal + σ²I)⁻¹ y from the same Cholesky the
     * grid-MAP already runs, the posterior mean at the training inputs
-    * is μ = K_signal·α. Round 7: consumes gp_harmonic_map's published
+    * is μ = K_signal·α. Consumes gp_harmonic_map's published
     * is_best row (equi-join on series id — the map side is one row per
     * series, AQE broadcasts it locally) instead of re-running the
     * 20-period scan privately: 21 Cholesky factorizations per series
@@ -298,41 +341,24 @@ object GpOps {
     * the pure-ML maps); rows-only oracle like the other Cholesky ops.
     */
   def gpLoocv(spark: SparkSession, dir: String): DataFrame =
-    SeriesOps.perSeries(spark, dir) { (id, t0, y0) =>
-      val stride = (t0.length + 119) / 120
-      val idx = t0.indices.by(stride).toArray
-      val t = idx.map(t0)
-      val yRaw = idx.map(y0)
-      val n = t.length
-      if (n < 10) Iterator.empty
-      else {
-        val mean = yRaw.sum / n
-        val y = yRaw.map(_ - mean)
-        val varY = math.max(y.map(v => v * v).sum / n, 1e-12)
-        val noise = 0.2 * varY
-        val results = (1 to 20).map { j =>
-          val p = j * 43200.0 // 12 h .. 10 d, the grid-MAP grid
-          val l = noisyCholesky(kernelMatrix(harmonicKernel(varY, p), t),
-            noise + 1e-9 * varY)
-          if (l == null) (p, Double.NegativeInfinity)
-          else {
-            val q = SeriesMath.choleskySolve(l, y)
-            val c = SeriesMath.choleskyInvDiag(l)
-            var s = n * math.log(2.0 * math.Pi)
-            var i = 0
-            while (i < n) {
-              s += q(i) * q(i) / c(i) - math.log(c(i))
-              i += 1
-            }
-            (p, -0.5 * s)
-          }
-        }
-        val best = results.maxBy(_._2)._1
-        results.iterator.map { case (p, s) =>
-          (id, p, math.rint(s * 1e3) / 1e3, if (p == best) 1 else 0)
-        }
-      }
-    }.toDF("id", "period", "loocv", "is_best")
+    SeriesOps.perSeries(spark, dir)(loocvFn)
+      .toDF("id", "period", "loocv", "is_best")
+
+  private def looScore(l: Array[Array[Double]], y: Array[Double]): Double = {
+    val n = y.length
+    val q = SeriesMath.choleskySolve(l, y)
+    val c = SeriesMath.choleskyInvDiag(l)
+    var s = n * math.log(2.0 * math.Pi)
+    var i = 0
+    while (i < n) {
+      s += q(i) * q(i) / c(i) - math.log(c(i))
+      i += 1
+    }
+    -0.5 * s
+  }
+
+  private val loocvFn =
+    gridScanFn(harmonicKernel, DefaultPeriodGrid, 120, looScore)
 
   // -------------------------------------------------------------------
   // gp_posterior — the spirit of the reference's MCMC posterior over
@@ -377,8 +403,11 @@ object GpOps {
           .as("is_median"))
   }
 
-  val gpPosteriorSql: String =
-    """WITH m AS (
+  /** The SQL twin of [[posteriorOver]]'s softmax over the
+    * gp_harmonic_map dump: `z` holds each period's e = exp(loglik −
+    * max), the series total z and the running total ce. */
+  private val posteriorCtesSql: String =
+    """m AS (
       |  SELECT * FROM read_parquet('__GRAFT_OUT__/gp_harmonic_map/*.parquet')),
       |s AS (SELECT id, period, loglik,
       |  max(loglik) OVER (PARTITION BY id) AS mx FROM m),
@@ -388,7 +417,10 @@ object GpOps {
       |  sum(e) OVER (PARTITION BY id) AS z,
       |  sum(e) OVER (PARTITION BY id ORDER BY period
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ce
-      |  FROM e)
+      |  FROM e)""".stripMargin
+
+  val gpPosteriorSql: String =
+    s"""WITH $posteriorCtesSql
       |SELECT id, period,
       |  round(e / z, 6) + 0.0 AS posterior,
       |  round(ce / z, 6) + 0.0 AS cdf,
@@ -447,17 +479,7 @@ object GpOps {
   }
 
   val gpPosteriorIntervalSql: String =
-    """WITH m AS (
-      |  SELECT * FROM read_parquet('__GRAFT_OUT__/gp_harmonic_map/*.parquet')),
-      |s AS (SELECT id, period, loglik,
-      |  max(loglik) OVER (PARTITION BY id) AS mx FROM m),
-      |e AS (SELECT id, period, exp(loglik - mx) AS e FROM s
-      |  WHERE isfinite(mx)),
-      |z AS (SELECT id, period, e,
-      |  sum(e) OVER (PARTITION BY id) AS z,
-      |  sum(e) OVER (PARTITION BY id ORDER BY period
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ce
-      |  FROM e),
+    s"""WITH $posteriorCtesSql,
       |p AS (SELECT id, period,
       |  round(e / z, 6) + 0.0 AS posterior,
       |  round(ce / z, 6) + 0.0 AS cdf FROM z),
@@ -745,7 +767,7 @@ object GpOps {
         .select(col("id"), col("period").as(p), col(score).as(s))
     val h = best(gpHarmonicMap(spark, dir), "harmonic_p", "harmonic_ll", "loglik")
     val b = best(gpBrownianMap(spark, dir), "brownian_p", "brownian_ll", "loglik")
-    val q = best(SeriesOps.gpPeriodMap(spark, dir), "qp_p", "qp_ll", "loglik")
+    val q = best(gpPeriodMap(spark, dir), "qp_p", "qp_ll", "loglik")
     val l = best(gpLoocv(spark, dir), "loocv_p", "loocv_score", "loocv")
     h.join(b, "id").join(q, "id").join(l, "id")
       .select(col("id"), col("harmonic_p"), col("brownian_p"), col("qp_p"),

@@ -244,67 +244,6 @@ object SeriesOps {
        |FROM g""".stripMargin
 
   // -------------------------------------------------------------------
-  // gp_period_map — reference gp.py (QuasiPeriodicGP): MAP period by
-  // grid search over the quasi-periodic kernel's marginal likelihood
-  // (exact Cholesky per series; MCMC is out of scope — the grid MAP is
-  // the Spark-native equivalent). Series subsampled to ≤200 points.
-  // -------------------------------------------------------------------
-  def gpPeriodMap(spark: SparkSession, dir: String): DataFrame =
-    perSeries(spark, dir) { (id, t0, y0) =>
-      val stride = (t0.length + 199) / 200
-      val idx = t0.indices.by(stride).toArray
-      val t = idx.map(t0)
-      val yRaw = idx.map(y0)
-      val n = t.length
-      if (n < 10) Iterator.empty
-      else {
-        val mean = yRaw.sum / n
-        val y = yRaw.map(_ - mean)
-        val varY = math.max(y.map(v => v * v).sum / n, 1e-12)
-        val noise = 0.2 * varY
-        val results = (1 to 20).map { j =>
-          val p = j * 43200.0 // 12 h .. 10 d
-          val wp = math.Pi / p
-          val ell = 3.0 * p
-          val il2 = 1.0 / (2.0 * ell * ell)
-          // kernel is even in d: fill the lower triangle and mirror
-          val k = Array.ofDim[Double](n, n)
-          var a = 0
-          while (a < n) {
-            var b = 0
-            while (b <= a) {
-              val d = t(a) - t(b)
-              val s = math.sin(wp * d)
-              val v = varY * math.exp(-5.0 * s * s - d * d * il2)
-              k(a)(b) = v
-              k(b)(a) = v
-              b += 1
-            }
-            k(a)(a) += noise + 1e-9 * varY
-            a += 1
-          }
-          val l = SeriesMath.cholesky(k)
-          if (l == null) (p, Double.NegativeInfinity)
-          else {
-            val alpha = SeriesMath.choleskySolve(l, y)
-            var ll = -0.5 * n * math.log(2.0 * math.Pi)
-            var i = 0
-            while (i < n) {
-              ll -= math.log(l(i)(i))
-              ll -= 0.5 * y(i) * alpha(i)
-              i += 1
-            }
-            (p, ll)
-          }
-        }
-        val best = results.maxBy(_._2)._1
-        results.iterator.map { case (p, ll) =>
-          (id, p, math.rint(ll * 1e3) / 1e3, if (p == best) 1 else 0)
-        }
-      }
-    }.toDF("id", "period", "loglik", "is_best")
-
-  // -------------------------------------------------------------------
   // hht_ht — reference timefrequency.py:129 (HHT method=HT): the plain
   // Hilbert-transform instantaneous frequency/amplitude of the signal
   // (no EMD normalization): analytic signal via FFT on the uniform 6 h
@@ -1093,17 +1032,15 @@ object SeriesOps {
        |FROM res r, LATERAL (SELECT unnest(range(r.n)) AS q) AS q"""
       .stripMargin
 
-  /** gp_period_map, HASH-GATED (round 11): the quasi-periodic
-    * Cholesky grid-MAP replayed as nested list_reduce folds — see
-    * [[CholeskySql]] for the harness and the bit-exactness argument.
-    * Per-period constants (ω_p = π/p, 1/2ℓ²) are Scala literals. */
+  /** gp_period_map's oracle (the builder is GpOps.gpPeriodMap): the
+    * quasi-periodic Cholesky grid-MAP replayed as nested list_reduce
+    * folds — see [[CholeskySql]] for the harness and the bit-exactness
+    * argument. Per-period constants (ω_p = π/p, 1/2ℓ²) are Scala
+    * literals from GpOps.quasiPeriodicConsts. */
   val gpPeriodMapSql: String = {
-    val gridRows = (1 to 20).map { j =>
-      val p = j * 43200.0
-      val wp = math.Pi / p
-      val ell = 3.0 * p
-      val il2 = 1.0 / (2.0 * ell * ell)
-      s"($j, ${SeriesMath.sqlDouble(p)}, ${SeriesMath.sqlDouble(wp)}, ${SeriesMath.sqlDouble(il2)})"
+    val gridRows = GpOps.DefaultPeriodGrid.toSeq.zipWithIndex.map { case (p, i) =>
+      val (wp, il2) = GpOps.quasiPeriodicConsts(p)
+      s"(${i + 1}, ${SeriesMath.sqlDouble(p)}, ${SeriesMath.sqlDouble(wp)}, ${SeriesMath.sqlDouble(il2)})"
     }
     CholeskySql.gridMapSql(200, Seq("wp", "il2"), gridRows,
       "vy * exp(-5.0 * sin(wp * __D__) * sin(wp * __D__) " +
@@ -1119,5 +1056,5 @@ object SeriesOps {
     Query("hht_ht", hhtHt, hhtHtSql),
     Query("hht_nht_norm", hhtNhtNorm, hhtNhtNormSql),
     Query("hht_nht", hhtNht, hhtNhtSql),
-    Query("gp_period_map", gpPeriodMap, gpPeriodMapSql))
+    Query("gp_period_map", GpOps.gpPeriodMap, gpPeriodMapSql))
 }

@@ -549,21 +549,32 @@ object TimeSeriesOps {
   // generated per series with sequence() (no driver loop) and merged
   // with samples via IGNORE NULLS window carries (the as-of pattern).
   // -------------------------------------------------------------------
-  def tsFillGaps(spark: SparkSession, dir: String): DataFrame = {
-    val step = 21600.0
-    val s = Tables.series(spark, dir)
+  def tsFillGaps(spark: SparkSession, dir: String): DataFrame =
+    gridBrackets(Tables.series(spark, dir), 21600.0)
+      .select(col("id"), col("t"), linearInterp.as("y_interp"))
+
+  /** Grid-bracket resampling, shared by ts_fill_gaps and ts_interp:
+    * per-series grid rows k·step for k in [ceil(min t / step),
+    * floor(max t / step)] (sequence(), no driver loop), unioned with
+    * the samples; the forward IGNORE NULLS carry gives each grid row
+    * its previous sample (tp, yp), the backward one its next (tn, yn).
+    * Returns the grid rows bracketed on both sides: one shuffle keyed
+    * by series id. */
+  private[tsa] def gridBrackets(s: DataFrame, step: Double): DataFrame = {
     val bounds = s.groupBy("id")
       .agg(ceil(min("t") / step).cast("long").as("k0"),
         floor(max("t") / step).cast("long").as("k1"))
     val grid = bounds
       .select(col("id"), explode(sequence(col("k0"), col("k1"))).as("k"))
-      .select(col("id"), (col("k") * step).as("t"), lit(null).cast("double").as("y"),
+      .select(col("id"), (col("k") * step).as("t"),
+        lit(null).cast("double").as("y"),
         lit(null).cast("long").as("eid"), lit(1).as("is_grid"))
     val merged = s.withColumn("is_grid", lit(0))
       .select("id", "t", "y", "eid", "is_grid").unionByName(grid)
-    // eid tiebreak + is_grid ASC on the backward pass: same as-of
-    // hygiene as ts_interp (duplicate-timestamp determinism; a grid
-    // point coinciding with the series' last sample must resolve tn)
+    // eid tiebreak: duplicate (id, t) samples otherwise make the carry
+    // nondeterministic (only sample rows can tie — grid times are
+    // distinct per series and grid eids are null, so engine-specific
+    // NULL ordering never engages)
     val wm = Window.partitionBy("id")
       .orderBy(col("t"), col("is_grid"), col("eid"))
     val rows = merged
@@ -571,6 +582,9 @@ object TimeSeriesOps {
         .over(wm.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("yp", last(when(col("is_grid") === 0, col("y")), ignoreNulls = true)
         .over(wm.rowsBetween(Window.unboundedPreceding, -1)))
+    // is_grid ASC here (not desc): in descending time a sample must
+    // still precede an equal-t grid row, or a grid point coinciding
+    // with the series' LAST sample sees tn = NULL and is dropped
     val wm2 = Window.partitionBy("id")
       .orderBy(col("t").desc, col("is_grid").asc, col("eid").desc)
     val full = rows
@@ -580,12 +594,38 @@ object TimeSeriesOps {
         .over(wm2.rowsBetween(Window.unboundedPreceding, -1)))
     full.filter(col("is_grid") === 1 &&
         col("tp").isNotNull && col("tn").isNotNull)
-      .select(col("id"), col("t"),
-        when(col("tn") === col("tp"), col("yp"))
-          .otherwise(round(col("yp") + (col("yn") - col("yp")) *
-            (col("t") - col("tp")) / (col("tn") - col("tp")), 6))
-          .as("y_interp"))
   }
+
+  /** Linear interpolation between a grid row's brackets. A grid point
+    * ON a sample has tp = tn (both carries resolve to the coincident
+    * sample): emit the sample value, not 0/0. */
+  private[tsa] def linearInterp: Column =
+    when(col("tn") === col("tp"), col("yp"))
+      .otherwise(round(col("yp") + (col("yn") - col("yp")) *
+        (col("t") - col("tp")) / (col("tn") - col("tp")), 6))
+
+  /** The SQL twin of [[gridBrackets]]' union and carries, over the
+    * oracle's `s` (samples) and `grid` CTEs. */
+  private[tsa] val gridBracketsSql: String =
+    """merged AS (
+      |  SELECT id, t, y, eid, 0 AS is_grid FROM s
+      |  UNION ALL SELECT id, t, y, eid, is_grid FROM grid),
+      |fwd AS (SELECT *,
+      |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
+      |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tp,
+      |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
+      |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yp
+      |  FROM merged),
+      |bwd AS (SELECT *,
+      |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
+      |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tn,
+      |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
+      |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yn
+      |  FROM fwd)""".stripMargin
 
   val tsFillGapsSql: String =
     s"""WITH s AS (${Tables.seriesSql}),
@@ -599,25 +639,7 @@ object TimeSeriesOps {
        |  -- OracleConstantsSpec guards that testdata stays inside.
        |  FROM bounds, generate_series(70000, 90000) AS g(k)
        |  WHERE g.k BETWEEN bounds.k0 AND bounds.k1),
-       |merged AS (
-       |  SELECT id, t, y, eid, 0 AS is_grid FROM s
-       |  UNION ALL SELECT id, t, y, eid, is_grid FROM grid),
-       |fwd AS (SELECT *,
-       |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tp,
-       |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yp
-       |  FROM merged),
-       |bwd AS (SELECT *,
-       |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tn,
-       |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yn
-       |  FROM fwd)
+       |$gridBracketsSql
        |SELECT id, t,
        |  CASE WHEN tn = tp THEN yp
        |       ELSE round(yp + (yn - yp) * (t - tp) / (tn - tp), 6)

@@ -5,9 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-7 core-series tail: general grid resampling (TSeries.interp)
-  * and series concatenation (TSeries.join) — the last two everyday
-  * TSeries utilities from the reference surface.
+/** General grid resampling (TSeries.interp) and series
+  * concatenation (TSeries.join), from the reference's TSeries surface.
   */
 object TimeSeriesOps4 {
 
@@ -28,54 +27,14 @@ object TimeSeriesOps4 {
   // Nearest ties (grid point equidistant from both samples) take the
   // PREVIOUS sample, scipy interp1d kind="nearest" semantics.
   // -------------------------------------------------------------------
-  def tsInterp(spark: SparkSession, dir: String): DataFrame = {
-    val step = 18000.0
-    val s = Tables.series(spark, dir)
-    val bounds = s.groupBy("id")
-      .agg(ceil(min("t") / step).cast("long").as("k0"),
-        floor(max("t") / step).cast("long").as("k1"))
-    val grid = bounds
-      .select(col("id"), explode(sequence(col("k0"), col("k1"))).as("k"))
-      .select(col("id"), (col("k") * step).as("t"),
-        lit(null).cast("double").as("y"),
-        lit(null).cast("long").as("eid"), lit(1).as("is_grid"))
-    val merged = s.withColumn("is_grid", lit(0))
-      .select("id", "t", "y", "eid", "is_grid").unionByName(grid)
-    // eid tiebreak: duplicate (id, t) samples otherwise make the carry
-    // nondeterministic (only sample rows can tie — grid times are
-    // distinct per series and grid eids are null, so engine-specific
-    // NULL ordering never engages)
-    val wm = Window.partitionBy("id")
-      .orderBy(col("t"), col("is_grid"), col("eid"))
-    val rows = merged
-      .withColumn("tp", last(when(col("is_grid") === 0, col("t")), ignoreNulls = true)
-        .over(wm.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("yp", last(when(col("is_grid") === 0, col("y")), ignoreNulls = true)
-        .over(wm.rowsBetween(Window.unboundedPreceding, -1)))
-    // is_grid ASC here (not desc): in descending time a sample must
-    // still precede an equal-t grid row, or a grid point coinciding
-    // with the series' LAST sample sees tn = NULL and is dropped
-    val wm2 = Window.partitionBy("id")
-      .orderBy(col("t").desc, col("is_grid").asc, col("eid").desc)
-    val full = rows
-      .withColumn("tn", last(when(col("is_grid") === 0, col("t")), ignoreNulls = true)
-        .over(wm2.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("yn", last(when(col("is_grid") === 0, col("y")), ignoreNulls = true)
-        .over(wm2.rowsBetween(Window.unboundedPreceding, -1)))
-    full.filter(col("is_grid") === 1 &&
-        col("tp").isNotNull && col("tn").isNotNull)
+  def tsInterp(spark: SparkSession, dir: String): DataFrame =
+    TimeSeriesOps.gridBrackets(Tables.series(spark, dir), 18000.0)
       .select(col("id"), col("t"),
         // nearest: original exact-cents value selected by bit-identical
         // time comparisons on both engines — no rounding needed
         when(col("t") - col("tp") <= col("tn") - col("t"), col("yp"))
           .otherwise(col("yn")).as("y_nearest"),
-        // a grid point ON a sample has tp = tn (both carries resolve to
-        // the coincident sample): emit the sample value, not 0/0
-        when(col("tn") === col("tp"), col("yp"))
-          .otherwise(round(col("yp") + (col("yn") - col("yp")) *
-            (col("t") - col("tp")) / (col("tn") - col("tp")), 6))
-          .as("y_linear"))
-  }
+        TimeSeriesOps.linearInterp.as("y_linear"))
 
   val tsInterpSql: String =
     s"""WITH s AS (${Tables.seriesSql}),
@@ -89,25 +48,7 @@ object TimeSeriesOps4 {
        |  -- OracleConstantsSpec guards that testdata stays inside.
        |  FROM bounds, generate_series(84000, 108000) AS g(k)
        |  WHERE g.k BETWEEN bounds.k0 AND bounds.k1),
-       |merged AS (
-       |  SELECT id, t, y, eid, 0 AS is_grid FROM s
-       |  UNION ALL SELECT id, t, y, eid, is_grid FROM grid),
-       |fwd AS (SELECT *,
-       |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tp,
-       |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t, is_grid, eid
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yp
-       |  FROM merged),
-       |bwd AS (SELECT *,
-       |  last_value(CASE WHEN is_grid = 0 THEN t END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS tn,
-       |  last_value(CASE WHEN is_grid = 0 THEN y END IGNORE NULLS)
-       |    OVER (PARTITION BY id ORDER BY t DESC, is_grid ASC, eid DESC
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS yn
-       |  FROM fwd)
+       |${TimeSeriesOps.gridBracketsSql}
        |SELECT id, t,
        |  CASE WHEN t - tp <= tn - t THEN yp ELSE yn END AS y_nearest,
        |  CASE WHEN tn = tp THEN yp

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * against 2·NF separate `avg` expressions over direct trig calls. */
 class GlsTrigSumsSpec extends AnyFunSuite with GraftSpark {
 
-  private val Nf = 7
-  private val Om = 2.0 * math.Pi * 1.7e-6
+  // the registered grid: the functions are registered once per
+  // session, with the bootstrap's fixed ω and nf
+  private val Nf = GlsTrigSums.Nf
+  private val Om = GlsTrigSums.Omega
 
   // the recurrence drifts from direct cos(kωt) by O(k·ulp); the
   // averages then differ by at most ~1e-12 relative — far inside the
@@ -19,7 +21,7 @@ class GlsTrigSumsSpec extends AnyFunSuite with GraftSpark {
   private val Tol = 1e-9
 
   test("gls_trig_y matches per-harmonic declarative averages") {
-    GlsTrigSums.register(spark, Om, Nf)
+    GlsTrigSums.register(spark)
     val df = Tables.series(spark, "/root/testdata/sf0.001")
       .select(col("id"), col("t").as("tc"), col("y"))
     val imp = df.groupBy("id").agg(expr("gls_trig_y(tc, y)").as("ar"))
@@ -48,7 +50,7 @@ class GlsTrigSumsSpec extends AnyFunSuite with GraftSpark {
   }
 
   test("gls_trig_base matches the four signal-independent moment sets") {
-    GlsTrigSums.register(spark, Om, Nf)
+    GlsTrigSums.register(spark)
     val df = Tables.series(spark, "/root/testdata/sf0.001")
       .select(col("id"), col("t").as("tc"))
     val imp = df.groupBy("id").agg(expr("gls_trig_base(tc)").as("ar"))
@@ -75,7 +77,7 @@ class GlsTrigSumsSpec extends AnyFunSuite with GraftSpark {
   }
 
   test("partial-merge path: result is partitioning-independent") {
-    GlsTrigSums.register(spark, Om, Nf)
+    GlsTrigSums.register(spark)
     val df = Tables.series(spark, "/root/testdata/sf0.001")
       .select(col("id"), col("t").as("tc"), col("y"))
     val one = df.coalesce(1).groupBy("id")

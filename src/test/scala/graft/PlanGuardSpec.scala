@@ -137,6 +137,14 @@ class PlanGuardSpec extends AnyFunSuite with GraftSpark {
     // the embeddings' µ-quantized (vec_id, i, rc) components
     assert(definers("""col\("pos"\)\.as\("i"\),\s*round\(col\("col"\)""") ==
       List("graft/sim/EmbeddingStats.scala"))
+    // grid-bracket resampling's backward carry (TimeSeriesOps.gridBrackets)
+    assert(definers("""col\("is_grid"\)\.asc, col\("eid"\)\.desc""",
+      _.startsWith("graft/tsa/")) == List("graft/tsa/TimeSeriesOps.scala"))
+    // the PQ shortlist and exact re-rank (Pq.shortlistRerank)
+    assert(definers("""col\("ark"\) <= SHORTLIST""") == List("graft/sim/Pq.scala"))
+    assert(definers("""col\("qrc"\) - col\("crc"\)""") == List("graft/sim/Pq.scala"))
+    // the quasi-periodic GP kernel (GpOps.quasiPeriodicKernel)
+    assert(definers(raw"math\.exp\(-5\.0 \* s \* s") == List("graft/tsa/GpOps.scala"))
   }
 
   test("each query is registered once, and only SparkEntry lists the modules") {
